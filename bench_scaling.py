@@ -308,7 +308,7 @@ def main() -> None:
 
 Protocol: the full dedup pipeline (assemble -> exact -> sign ->
 candidates -> verify -> cluster; DedupConfig defaults: char-12
-shingles, 128-bucket OPH MinHash as 32x4 LSH bands, SimHash k=3,
+shingles, 128-bucket OPH MinHash as 32x4 LSH bands,
 winnowed substring anchors + suffix-array LCS verify, Jaccard >= 0.8;
 encode_ids={args.encode_ids})
 submitted with ``spark-submit --py-files`` to a REAL local standalone

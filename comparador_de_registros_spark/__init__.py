@@ -12,7 +12,7 @@ record-linkage scorer — see /root/reference) as a Spark-first pipeline:
   configs) that parameterize the engine; the spec IS the logical plan.
 * ``operators``  — DataFrame -> DataFrame operators: pair scoring,
   frequency aggregation, conversation assembly, shingling, MinHash-LSH,
-  SimHash Hamming blocking, substring anchoring, Jaccard verification,
+  substring anchoring, Jaccard verification,
   connected-components clustering, text analysis, similarity search.
 * ``sources``    — catalog abstraction (parquet locally, Iceberg
   ``writeTo`` in production) and the deterministic synthetic transcript

@@ -12,7 +12,6 @@ Algorithms are standard published constructions:
 * polynomial rolling k-gram hashes computed via invertible-base prefix
   sums (base odd => invertible mod 2^64), fully vectorized;
 * MinHash as min over k seeded mixes (Broder 1997);
-* SimHash bit-majority (Charikar 2002);
 * winnowing fingerprint selection (Schleimer/Wilkerson/Aiken 2003).
 """
 
@@ -136,19 +135,6 @@ def windows_from_prefix(prefix: np.ndarray, k: int, seed: int = 0) -> np.ndarray
         return _finalize(windows, seed)
 
 
-def span_hashes(
-    prefix: np.ndarray, starts: np.ndarray, ends: np.ndarray, seed: int = 0
-) -> np.ndarray:
-    """Vectorized :func:`hash_bytes` of ``data[starts[i]:ends[i]]`` for
-    every span: h = (S[e] - S[s]) * B^e = sum_t a[s+t] B^(len-1-t) —
-    bit-identical to hash_bytes on the sliced bytes (same polynomial,
-    same finalizer)."""
-    with np.errstate(over="ignore"):
-        pows, _ = _power_tables(len(prefix) - 1)
-        h = (prefix[ends] - prefix[starts]) * pows[ends]
-        return _finalize(h, seed)
-
-
 def rolling_kgram_hashes(data: bytes, k: int, seed: int = 0) -> np.ndarray:
     """All k-gram polynomial hashes of ``data`` (len n-k+1, uint64),
     fully vectorized via invertible-base prefix sums."""
@@ -235,21 +221,6 @@ def make_seeds(num: int, seed: int) -> np.ndarray:
     return splitmix64(
         np.arange(1, num + 1, dtype=_U64) * _GOLDEN ^ _U64(seed & 0xFFFFFFFFFFFFFFFF)
     )
-
-
-def simhash64(token_hashes: np.ndarray) -> int:
-    """64-bit SimHash (bit-majority of token hashes, unit weights).
-    Returns a signed int64 (two's complement) for a Spark LongType col."""
-    if len(token_hashes) == 0:
-        return 0
-    bits = (
-        (token_hashes[:, None] >> np.arange(64, dtype=_U64)[None, :]) & _U64(1)
-    ).astype(np.int64)
-    majority = (2 * bits - 1).sum(axis=0) > 0
-    val = 0
-    for i in np.nonzero(majority)[0]:
-        val |= 1 << int(i)
-    return val - (1 << 64) if val >= (1 << 63) else val
 
 
 def winnow(gram_hashes: np.ndarray, window: int) -> np.ndarray:

@@ -221,18 +221,3 @@ def connected_components(
         .groupBy("conv_id")
         .agg(F.min("cluster_id").alias("cluster_id"))
     )
-
-
-def attach_members(
-    clusters: DataFrame, member_edges: DataFrame, rep: str = "rep_id", member: str = "conv_id"
-) -> DataFrame:
-    """Attach exact-duplicate members (collapsed upstream) to their
-    representative's cluster: member -> cluster_id(rep)."""
-    rep_clusters = clusters.withColumnRenamed("conv_id", rep)
-    return (
-        member_edges.join(rep_clusters, rep, "left")
-        .select(
-            F.col(member).alias("conv_id"),
-            F.coalesce("cluster_id", F.col(rep)).alias("cluster_id"),
-        )
-    )

@@ -3,7 +3,7 @@
 The transcript pipeline (operators/pipeline.py) works on assembled
 conversations; these wrappers expose the same dedup machinery over any
 generic ``(doc_id, text)`` documents table — exact hash dedup, token
-n-gram Jaccard, MinHash-LSH, SimHash — plus embedding-cosine near-dup
+n-gram Jaccard, MinHash-LSH — plus embedding-cosine near-dup
 via operators/similarity.py. Exact and n-gram variants are fully
 native (and have exact SQL oracles); the signature variants reuse the
 mapInPandas signature stage.
@@ -22,7 +22,6 @@ from comparador_de_registros_spark.operators.signatures import (
 )
 from comparador_de_registros_spark.operators.verify import (
     release_scored,
-    union_candidates,
     verify_pairs,
 )
 from comparador_de_registros_spark.plans.configs import DedupConfig
@@ -149,9 +148,9 @@ def signature_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """MinHash-LSH (+SimHash, +substring) near-dup pairs over a generic
-    documents table: sign -> candidates -> verify. -> (a, b, jaccard,
-    contained, is_dup, sources) with string ids.
+    """MinHash-LSH (+substring) near-dup pairs over a generic documents
+    table: sign -> candidates -> verify. -> (a, b, jaccard, contained,
+    is_dup, sources) with string ids.
 
     EAGER: calling this runs the full sign + candidate-generation
     computation immediately (the candidate cache is materialized with a
@@ -186,10 +185,7 @@ def signature_dup_pairs(
     )
     sigs = compute_signatures(convs, cfg).persist()
     cand, _, _ = lsh_ops.unified_candidates(
-        sigs,
-        cfg.lsh,
-        cfg.simhash if cfg.use_simhash else None,
-        cfg.use_substring,
+        sigs, cfg.lsh, use_substring=cfg.use_substring
     )
     # persist the (slim) candidate pairs: verify_pairs consumes the
     # candidates plan more than once — the participant id set it

@@ -1,12 +1,12 @@
-"""Candidate-pair generation: MinHash-LSH bands, SimHash Hamming
-blocks, and winnowed substring anchors.
+"""Candidate-pair generation: MinHash-LSH bands and winnowed substring
+anchors.
 
-All three generators share the same physical shape — explode a per-doc
-key set, equi self-join on the key, keep ``a < b`` — which Catalyst
-plans as a shuffled hash/sort-merge join on the key. Everything here is
-native Column expressions (band hashing via ``F.hash`` over signature
-slices, SimHash blocks via shifts/masks, Hamming verify via
-``bit_count(a ^ b)``): zero Python in the candidate path.
+Both generators share the same physical shape — explode a per-doc key
+set, group on the key, enumerate ``a < b`` inside each bucket — so
+:func:`unified_candidates` runs them through one shuffle. Everything
+here is native Column expressions (band hashing via ``F.hash`` over
+signature slices, anchor keys via ``F.hash``): zero Python in the
+candidate path.
 
 Skew handling (north_rule: "partitioning / shuffle / skew handled
 explicitly"):
@@ -23,44 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from comparador_de_registros_spark.plans.configs import (
-    LshConfig,
-    SimHashConfig,
-)
-
-
-def _self_join_pairs(
-    keyed: DataFrame,
-    key_cols: list[str],
-    max_bucket_size: int,
-    source: str,
-) -> tuple[DataFrame, DataFrame]:
-    """(conv_id, *key_cols) -> distinct candidate pairs (a, b, source)
-    with a < b, skipping buckets over ``max_bucket_size``.
-
-    Returns (pairs, dropped_buckets) — the latter for metrics/lineage.
-    """
-    sized = keyed.groupBy(*key_cols).agg(
-        F.collect_list("conv_id").alias("members"), F.count("*").alias("sz")
-    )
-    ok = sized.where(F.col("sz").between(2, max_bucket_size))
-    dropped = sized.where(F.col("sz") > max_bucket_size).select(
-        *key_cols, "sz"
-    )
-    # enumerate pairs inside each bucket without a second shuffle:
-    # the bucket is already materialized as an array (bounded by the
-    # cap), so a sorted-array double-explode beats re-joining the
-    # exploded table against itself at scale.
-    m = F.array_sort("members")
-    pairs = (
-        ok.select(m.alias("m"))
-        .select(F.posexplode("m").alias("i", "a"), F.col("m"))
-        .select("a", F.explode(F.slice("m", F.col("i") + 2, F.size("m"))).alias("b"))
-        .select("a", "b")
-        .distinct()
-        .withColumn("source", F.lit(source))
-    )
-    return pairs, dropped
+from comparador_de_registros_spark.plans.configs import LshConfig
 
 
 def lsh_band_keys(sig_col: str, cfg: LshConfig) -> Column:
@@ -75,100 +38,21 @@ def lsh_band_keys(sig_col: str, cfg: LshConfig) -> Column:
     )
 
 
-def minhash_lsh_candidates(
-    signatures: DataFrame, cfg: LshConfig
-) -> tuple[DataFrame, DataFrame]:
-    """MinHash banding: equal band-slice => candidate.
-
-    -> (pairs(a, b, source='lsh'), dropped_buckets(band, key, sz))"""
-    keyed = signatures.select(
-        "conv_id",
-        F.posexplode(lsh_band_keys("minhash", cfg)).alias("band", "key"),
-    )
-    return _self_join_pairs(keyed, ["band", "key"], cfg.max_bucket_size, "lsh")
-
-
-def simhash_candidates(
-    signatures: DataFrame, cfg: SimHashConfig, max_bucket_size: int
-) -> tuple[DataFrame, DataFrame]:
-    """SimHash pigeonhole blocking: split the 64-bit fingerprint into
-    ``hamming_k + 1`` blocks; two docs within Hamming distance k agree
-    on at least one full block. Equi-join per block, then the exact
-    ``bit_count(xor) <= k`` theta post-filter."""
-    blocks = cfg.hamming_k + 1
-    width = cfg.bits // blocks
-    mask = (1 << width) - 1
-    keyed = signatures.select(
-        "conv_id",
-        F.col("simhash"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(
-                        F.lit(mask)
-                    )
-                    for i in range(blocks)
-                ]
-            )
-        ).alias("block", "key"),
-    )
-    sized = keyed.groupBy("block", "key").agg(
-        F.collect_list(F.struct("conv_id", "simhash")).alias("members"),
-        F.count("*").alias("sz"),
-    )
-    ok = sized.where(F.col("sz").between(2, max_bucket_size))
-    dropped = sized.where(F.col("sz") > max_bucket_size).select("block", "key", "sz")
-    m = F.array_sort("members")
-    pairs = (
-        ok.select(m.alias("m"))
-        .select(F.posexplode("m").alias("i", "l"), F.col("m"))
-        .select(
-            "l", F.explode(F.slice("m", F.col("i") + 2, F.size("m"))).alias("r")
-        )
-        .where(
-            F.bit_count(
-                F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
-            )
-            <= cfg.hamming_k
-        )
-        .select(
-            F.col("l.conv_id").alias("a"),
-            F.col("r.conv_id").alias("b"),
-        )
-        .distinct()
-        .withColumn("source", F.lit("simhash"))
-    )
-    return pairs, dropped
-
-
-def substring_candidates(
-    signatures: DataFrame, max_bucket_size: int
-) -> tuple[DataFrame, DataFrame]:
-    """Winnowed-anchor blocking for exact-substring duplicates: two docs
-    sharing any substring of >= window+gram-1 bytes share an anchor
-    (winnowing guarantee). Containment verification happens in the
-    verify stage (needs the doc text)."""
-    keyed = signatures.select(
-        "conv_id", F.explode("anchors").alias("key")
-    )
-    return _self_join_pairs(keyed, ["key"], max_bucket_size, "substring")
-
-
 def unified_candidates(
     signatures: DataFrame,
     lsh_cfg: LshConfig,
-    sim_cfg: SimHashConfig | None,
-    use_substring: bool,
+    simhash_cfg: None = None,
+    use_substring: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """All three generators through ONE shuffle.
+    """Every enabled generator through ONE shuffle.
 
-    The per-generator implementations above each run their own
-    explode -> groupBy pipeline (three shuffles over the signature
-    table, ~3x the stage-scheduling overhead). At scale the bucket
-    grouping dominates the candidates stage, so this variant unions the
-    three key streams under a (gen, key1, key2) composite key and
-    groups ONCE; the SimHash Hamming post-filter is applied per-pair on
-    the carried fingerprints.
+    One explode -> groupBy per generator would shuffle the signature
+    table once each (~2x the stage-scheduling overhead), and at scale
+    the bucket grouping dominates the candidates stage; so the key
+    streams are unioned under a (gen, key1, key2) composite key and
+    grouped ONCE. ``simhash_cfg`` is the slot of the removed SimHash
+    generator (plans/configs.py: ``DedupConfig.use_simhash``); it is
+    kept so positional callers keep working and must be None.
 
     -> (candidates(a, b, sources), dropped(generator, sz), buckets)
 
@@ -181,68 +65,33 @@ def unified_candidates(
     pipeline does); Spark's cache manager rewrites both projections
     onto the cached table by plan-fragment equality.
     """
-    # The generator tag is an INT id (0=lsh, 1=simhash, 2=substring):
-    # narrower shuffle key (4 B vs an 8-11 B string) and cheaper
-    # hashing/compare in the bucket groupBy; the key SPACE is unchanged
-    # (the string gen mapped 1:1 to g), so bucket membership — and
-    # therefore the candidate set — is identical. (A single-pass
-    # variant building one concat'd array of (g,k1,k2) structs measured
-    # SLOWER: the struct-building transform() HOFs are interpreted per
-    # element, while these posexplodes over codegen'd int arrays are
-    # not.)
-    # Only the simhash generator's buckets ever READ the carried
-    # fingerprint (the Hamming post-filter guards on g == 1), so the
-    # lsh/substring key streams ship a NULL instead — ~8 B saved on
-    # ~90% of the keyed rows feeding the bucket shuffle (the pipeline's
-    # biggest shuffle byte line at 600k base), with bucket contents and
-    # pair output untouched (conv_ids are unique within a bucket, so
-    # simhash never tie-breaks the member sort).
-    null_sim = F.lit(None).cast("long").alias("simhash")
-    gens = []
-    base = signatures.select(
+    if simhash_cfg is not None:
+        raise ValueError("SimHash blocking was removed; pass None")
+    # The generator tag is an INT id (0=lsh, 1=substring): narrower
+    # shuffle key (4 B vs an 8-11 B string) and cheaper hashing/compare
+    # in the bucket groupBy. (A single-pass variant building one
+    # concat'd array of (g,k1,k2) structs measured SLOWER: the
+    # struct-building transform() HOFs are interpreted per element,
+    # while these posexplodes over codegen'd int arrays are not.)
+    keyed = signatures.select(
         "conv_id",
         F.posexplode(lsh_band_keys("minhash", lsh_cfg)).alias("k1", "k2"),
-    ).select("conv_id", null_sim, F.lit(0).alias("g"), "k1", "k2")
-    gens.append(base)
-    if sim_cfg is not None:
-        blocks = sim_cfg.hamming_k + 1
-        width = sim_cfg.bits // blocks
-        mask = (1 << width) - 1
-        gens.append(
-            signatures.select(
-                "conv_id", F.col("simhash"),
-                F.posexplode(
-                    F.array(
-                        *[
-                            F.shiftrightunsigned(
-                                F.col("simhash"), i * width
-                            ).bitwiseAND(F.lit(mask)).cast("int")
-                            for i in range(blocks)
-                        ]
-                    )
-                ).alias("k1", "simk"),
-            ).select(
-                "conv_id", "simhash", F.lit(1).alias("g"),
-                "k1", F.col("simk").cast("int").alias("k2"),
-            )
-        )
+    ).select("conv_id", F.lit(0).alias("g"), "k1", "k2")
     if use_substring:
-        gens.append(
+        keyed = keyed.unionByName(
             signatures.select(
                 "conv_id",
                 F.explode("anchors").alias("anchor"),
             ).select(
-                "conv_id", null_sim, F.lit(2).alias("g"),
+                "conv_id",
+                F.lit(1).alias("g"),
                 F.lit(0).alias("k1"),
                 F.hash("anchor").alias("k2"),
             )
         )
-    keyed = gens[0]
-    for g_df in gens[1:]:
-        keyed = keyed.unionByName(g_df)
 
     sized = keyed.groupBy("g", "k1", "k2").agg(
-        F.collect_list(F.struct("conv_id", "simhash")).alias("members"),
+        F.collect_list("conv_id").alias("members"),
         F.count("*").alias("sz"),
     )
     # both outputs only look at multi-member buckets; filtering BEFORE
@@ -253,48 +102,24 @@ def unified_candidates(
     ok = multi.where(F.col("sz") <= lsh_cfg.max_bucket_size)
     dropped = multi.where(F.col("sz") > lsh_cfg.max_bucket_size).select(
         F.when(F.col("g") == 0, F.lit("lsh"))
-        .when(F.col("g") == 1, F.lit("simhash"))
         .otherwise(F.lit("substring"))
         .alias("generator"),
         "sz",
     )
     m = F.array_sort("members")
-    hamming_k = sim_cfg.hamming_k if sim_cfg is not None else 0
 
     # Enumerate each bucket's pairs ENTIRELY array-side (nested
-    # transform/filter higher-order functions), so only pairs that pass
-    # the SimHash Hamming post-filter ever materialize as rows. The old
-    # shape (posexplode members carrying the full bucket array, slice +
-    # explode, then a row-level Hamming .where) copied the bucket array
-    # into every member's UnsafeRow (a capped 2000-member bucket ≈
-    # 2000 x ~60 KB of memcpy) and materialized every ENUMERATED pair
-    # as a row before filtering — 26.3M enumerated vs 2.64M passing at
-    # the sf1.0 bench (50k docs). Here the Hamming xor/bit_count runs
-    # inside the codegen'd array loop and failing pairs are dropped
-    # in-place. Worst-case row width is bounded by the bucket cap:
-    # C(max_bucket_size, 2) pair structs ≈ 60 MB at the default 2000 —
-    # only reached if an entire capped bucket is mutually within
-    # Hamming k.
+    # transform/filter higher-order functions). The old shape
+    # (posexplode members carrying the full bucket array, slice +
+    # explode) copied the bucket array into every member's UnsafeRow (a
+    # capped 2000-member bucket ≈ 2000 x ~60 KB of memcpy). Worst-case
+    # row width is bounded by the bucket cap: C(max_bucket_size, 2) pair
+    # structs ≈ 60 MB at the default 2000.
     def _bucket_pairs(mcol):
         def inner(l, i):
-            keep = F.filter(
-                mcol,
-                lambda r, j: (j > i)
-                & (
-                    (F.col("g") != F.lit(1))
-                    | (
-                        F.bit_count(
-                            l["simhash"].bitwiseXOR(r["simhash"])
-                        )
-                        <= hamming_k
-                    )
-                ),
-            )
             return F.transform(
-                keep,
-                lambda r: F.struct(
-                    l["conv_id"].alias("a"), r["conv_id"].alias("b")
-                ),
+                F.filter(mcol, lambda r, j: j > i),
+                lambda r: F.struct(l.alias("a"), r.alias("b")),
             )
 
         return F.flatten(F.transform(mcol, inner))
@@ -306,19 +131,14 @@ def unified_candidates(
     # cheaper at millions of pairs. The sorted sources array is
     # reconstructed natively from the mask: slice(array(x), 1, bit)
     # yields [] or [x], and concatenating in alphabetical generator
-    # order ("lsh" < "simhash" < "substring") reproduces
+    # order ("lsh" < "substring") reproduces
     # array_sort(collect_set(source)) exactly.
     src_bit = F.expr("shiftleft(1, g)")
     mask = F.col("mask")
     sources = F.concat(
         F.slice(F.array(F.lit("lsh")), 1, mask.bitwiseAND(1)),
         F.slice(
-            F.array(F.lit("simhash")), 1, F.shiftright(mask, 1).bitwiseAND(1)
-        ),
-        F.slice(
-            F.array(F.lit("substring")),
-            1,
-            F.shiftright(mask, 2).bitwiseAND(1),
+            F.array(F.lit("substring")), 1, F.shiftright(mask, 1).bitwiseAND(1)
         ),
     )
     pairs = (

@@ -165,6 +165,11 @@ class DedupPipeline:
             self.catalog.write(df, f"{T_LINEAGE}/{self.run_id}_all", num_files=1)
             self._pending_lineage = []
 
+    def _generators(self) -> list[str]:
+        """The candidate generators this config enables (the names they
+        carry in the ``sources`` column)."""
+        return ["lsh", "substring"] if self.cfg.use_substring else ["lsh"]
+
     # --- stages ------------------------------------------------------------
 
     def stage_assemble(self, spark: SparkSession, turns: DataFrame) -> None:
@@ -310,26 +315,16 @@ class DedupPipeline:
         if self.cfg.encode_ids:
             sigs = self._encode_col(sigs, self._id_map(spark), "conv_id")
         cand, dropped, buckets = lsh_ops.unified_candidates(
-            sigs,
-            self.cfg.lsh,
-            self.cfg.simhash if self.cfg.use_simhash else None,
-            self.cfg.use_substring,
+            sigs, self.cfg.lsh, use_substring=self.cfg.use_substring
         )
         # the candidates and dropped-buckets writes are two actions over
         # the same grouped bucket table; persist it so the big
         # explode->groupBy shuffle runs once, not twice
         buckets.persist()
-        metric_cols = {
-            "n_candidates": F.count(F.lit(1)),
-            "n_candidates_lsh": _count_if(F.array_contains("sources", "lsh")),
-        }
-        if self.cfg.use_simhash:
-            metric_cols["n_candidates_simhash"] = _count_if(
-                F.array_contains("sources", "simhash")
-            )
-        if self.cfg.use_substring:
-            metric_cols["n_candidates_substring"] = _count_if(
-                F.array_contains("sources", "substring")
+        metric_cols = {"n_candidates": F.count(F.lit(1))}
+        for gen in self._generators():
+            metric_cols[f"n_candidates_{gen}"] = _count_if(
+                F.array_contains("sources", gen)
             )
         try:
             # materialize the shared bucket cache once, then run the two
@@ -388,16 +383,23 @@ class DedupPipeline:
             rows for _f, rows, _b in self.catalog.partition_lineage(T_CAND)
         )
         verified = verify_pairs(cand, sigs, docs, self.cfg, n_candidates=n_cand)
+        dup = F.col("is_dup")
+        metric_cols = {
+            "n_verified_dups": _count_if(dup),
+            "n_rejected": _count_if(~dup),
+        }
+        # per-generator dups, and the MARGINAL dups only that generator
+        # found (sources == [gen]): what each generator pays for itself
+        for gen in self._generators():
+            metric_cols[f"n_dups_{gen}"] = _count_if(
+                dup & F.array_contains("sources", gen)
+            )
+            metric_cols[f"n_dups_only_{gen}"] = _count_if(
+                dup & (F.col("sources") == F.array(F.lit(gen)))
+            )
         try:
             self._write_observed(
-                spark,
-                verified,
-                T_VERIFIED,
-                "verify",
-                {
-                    "n_verified_dups": _count_if(F.col("is_dup")),
-                    "n_rejected": _count_if(~F.col("is_dup")),
-                },
+                spark, verified, T_VERIFIED, "verify", metric_cols
             )
         finally:
             release_scored(verified)

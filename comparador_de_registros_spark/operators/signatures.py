@@ -1,7 +1,7 @@
-"""Signature stage: documents -> (shingles, MinHash, SimHash, anchors).
+"""Signature stage: documents -> (shingles, MinHash, anchors).
 
-One ``mapInPandas`` pass computes all four artifacts per document —
-a single Arrow round-trip per batch instead of four pandas-UDF columns
+One ``mapInPandas`` pass computes all three artifacts per document —
+a single Arrow round-trip per batch instead of three pandas-UDF columns
 re-shipping the document text (SURVEY.md §2.11: vectorized pandas/Arrow
 UDFs only; this is the designated slow path, everything downstream of
 it is native).
@@ -13,8 +13,8 @@ hashes are computed once over the whole buffer (the polynomial window
 hash is position-independent, functions/hashing.py), and per-document
 results are carved out by POSITION — windows that straddle a document
 boundary are excluded by index range, never by content, so the pad byte
-value is irrelevant to correctness. Distinct-per-doc, MinHash minima,
-SimHash bit majorities and winnowing window minima are all computed
+value is irrelevant to correctness. Distinct-per-doc, MinHash minima
+and winnowing window minima are all computed
 with one sort / ``reduceat`` / block-scan over the batch instead of a
 Python loop per document (round-1 bottleneck: the per-doc loop was 60%
 of pipeline wall time; parity with the per-doc functions is pinned by
@@ -56,7 +56,6 @@ SIGNATURE_SCHEMA = T.StructType(
         # truncates identically (oracle.py).
         T.StructField("shingles", T.ArrayType(T.IntegerType())),
         T.StructField("minhash", T.ArrayType(T.IntegerType())),
-        T.StructField("simhash", T.LongType()),
         T.StructField("anchors", T.ArrayType(T.LongType())),
     ]
 )
@@ -149,29 +148,24 @@ def batch_signatures(
 
     Bit-for-bit equal to running the per-doc primitives
     (H.char_shingles, H.oph_signature / H.minhash_signature,
-    H.simhash64 over hash_bytes of the distinct space-separated tokens,
-    H.winnow + stored_shingles) on each text. Inputs must be normalized
-    docs (whitespace already collapsed to single spaces — the SimHash
-    tokenizer splits the byte buffer on 0x20). Returns columns ready for
+    H.winnow + stored_shingles) on each text. Returns columns ready for
     a pandas DataFrame.
     """
     sh_cfg, sub_cfg = cfg.shingle, cfg.substring
     k = sh_cfg.k
-    sim_seed = cfg.simhash.seed
     use_sub = cfg.use_substring
     n = len(texts)
     enc = [t.encode("utf-8") for t in texts]
     lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=n)
     pad = (max(k, sub_cfg.gram) if use_sub else k) - 1
-    pad = max(pad, 1)  # >= 1 NUL so token runs can't straddle docs
     buf = (b"\x00" * pad).join(enc)
     off = np.zeros(n, dtype=np.int64)
     if n > 1:
         np.cumsum(lens[:-1] + pad, out=off[1:])
 
-    # ONE polynomial prefix pass serves shingles, anchors and SimHash
-    # token hashes (hashing.py: windows_from_prefix / span_hashes are
-    # bit-identical to the per-doc forms)
+    # ONE polynomial prefix pass serves shingles and anchors
+    # (hashing.py: windows_from_prefix is bit-identical to the per-doc
+    # rolling_kgram_hashes)
     prefix = H.byte_prefix_sums(buf)
 
     # --- char k-gram shingles, distinct per doc --------------------------
@@ -240,49 +234,6 @@ def batch_signatures(
                     .astype(np.int32)
                 )
 
-    # --- SimHash: bit majority over distinct-token hashes -----------------
-    # Tokens are extracted from the byte buffer directly (separators:
-    # space + the NUL pad), hashed via span_hashes (== hash_bytes), and
-    # deduped per doc with the same sort trick — zero per-token Python.
-    sim = np.zeros(n, dtype=np.int64)
-    barr = np.frombuffer(buf, dtype=np.uint8)
-    if len(barr):
-        is_sep = (barr == 0x20) | (barr == 0x00)
-        nonsep = ~is_sep
-        prev_sep = np.empty(len(barr), dtype=bool)
-        prev_sep[0] = True
-        prev_sep[1:] = is_sep[:-1]
-        next_sep = np.empty(len(barr), dtype=bool)
-        next_sep[-1] = True
-        next_sep[:-1] = is_sep[1:]
-        t_starts = np.flatnonzero(nonsep & prev_sep)
-        t_ends = np.flatnonzero(nonsep & next_sep) + 1
-        tok_doc = np.searchsorted(off, t_starts, side="right") - 1
-        th = H.span_hashes(prefix, t_starts, t_ends, sim_seed)
-        _sort_segments(th, np.bincount(tok_doc, minlength=n))
-        tv, td = _dedupe_sorted(th, tok_doc)
-        tok_cnt = np.bincount(td, minlength=n).astype(np.int64)
-        tnz = tok_cnt > 0
-        if len(tv):
-            # bits[:, i] == (hash >> i) & 1 via the little-endian byte
-            # view. Per-doc bit sums are one contiguous-axis reduction
-            # per segment — numpy has no fast segmented reduction
-            # (reduceat and a global cumsum both measured 5-20x slower
-            # than this small loop of vectorized row sums).
-            bits = np.unpackbits(
-                tv.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-            )
-            cum = np.cumsum(tok_cnt)
-            docs_t = np.flatnonzero(tnz)
-            ones = np.empty((len(docs_t), 64), dtype=np.int64)
-            for j, d in enumerate(docs_t):
-                bits[cum[d] - tok_cnt[d] : cum[d]].sum(
-                    axis=0, dtype=np.int64, out=ones[j]
-                )
-            maj = (2 * ones) > tok_cnt[tnz, None]
-            packed = np.packbits(maj, axis=1, bitorder="little")
-            sim[tnz] = packed.reshape(-1).view(np.uint64).view(np.int64)
-
     # --- winnowed substring anchors ---------------------------------------
     if use_sub:
         gram, window = sub_cfg.gram, sub_cfg.window
@@ -321,7 +272,6 @@ def batch_signatures(
         "n_shingles": n_sh.astype(np.int32),
         "shingles": stored,
         "minhash": list(mh),
-        "simhash": sim,
         "anchors": anchors,
     }
 
@@ -339,7 +289,10 @@ def scan_is_narrow(spark, df: DataFrame, cores: int) -> bool:
     second-largest fixed cost of the bench's minhash line). Non-file
     sources (local relations in tests) keep the .rdd probe; frames with
     >512 files are treated as wide (at that width the spread decision
-    is irrelevant and per-file RPCs are not)."""
+    is irrelevant and per-file RPCs are not). The probe is a heuristic,
+    so it never fails the query: if the metadata calls raise (a file
+    gone between listing and stat, an unreachable FileSystem) it falls
+    back to the .rdd probe."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -348,22 +301,25 @@ def scan_is_narrow(spark, df: DataFrame, cores: int) -> bool:
         return df.rdd.getNumPartitions() < cores
     if len(files) >= 512:
         return False
-    jvm = spark._jvm
-    ju = jvm.org.apache.spark.network.util.JavaUtils
-    mpb = ju.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-    )
-    open_cost = ju.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4MB")
-    )
-    hconf = spark._jsc.hadoopConfiguration()
-    total = 0
-    fs = None
-    for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        if fs is None:
-            fs = p.getFileSystem(hconf)
-        total += fs.getFileStatus(p).getLen()
+    try:
+        jvm = spark._jvm
+        ju = jvm.org.apache.spark.network.util.JavaUtils
+        mpb = ju.byteStringAsBytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
+        )
+        open_cost = ju.byteStringAsBytes(
+            spark.conf.get("spark.sql.files.openCostInBytes", "4MB")
+        )
+        hconf = spark._jsc.hadoopConfiguration()
+        total = 0
+        fs = None
+        for f in files:
+            p = jvm.org.apache.hadoop.fs.Path(f)
+            if fs is None:
+                fs = p.getFileSystem(hconf)
+            total += fs.getFileStatus(p).getLen()
+    except Exception:
+        return df.rdd.getNumPartitions() < cores
     # Spark packs (file piece + openCost) greedily into maxPartitionBytes
     # bins; this ceiling matches that for small files and underestimates
     # only when single files exceed mpb — exactly the case where the

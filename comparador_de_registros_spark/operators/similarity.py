@@ -213,13 +213,27 @@ def srp_candidate_pairs_with_dropped(
 ) -> tuple[DataFrame, DataFrame]:
     """As :func:`srp_candidate_pairs`, also returning
     ``dropped(band, key, sz)`` for lineage/metrics."""
-    from comparador_de_registros_spark.operators.lsh import _self_join_pairs
-
     buckets = srp_lsh_buckets(
         embeddings, n_bits, bands, seed, id_col, vec_col, dim
-    ).withColumnRenamed(id_col, "conv_id")
-    cand, dropped = _self_join_pairs(
-        buckets, ["band", "key"], max_bucket_size, "srp"
+    )
+    sized = buckets.groupBy("band", "key").agg(
+        F.collect_list(id_col).alias("members"), F.count("*").alias("sz")
+    )
+    dropped = sized.where(F.col("sz") > max_bucket_size).select(
+        "band", "key", "sz"
+    )
+    # enumerate pairs inside each capped bucket without a second
+    # shuffle: a sorted-array double-explode instead of re-joining the
+    # exploded table against itself
+    m = F.array_sort("members")
+    cand = (
+        sized.where(F.col("sz").between(2, max_bucket_size))
+        .select(m.alias("m"))
+        .select(F.posexplode("m").alias("i", "a"), F.col("m"))
+        .select(
+            "a", F.explode(F.slice("m", F.col("i") + 2, F.size("m"))).alias("b")
+        )
+        .distinct()
     )
     # NOTE: unlike the top-k paths, norms are NOT hoisted here — the
     # candidate set is bucket-capped and small relative to the corpus,
@@ -229,8 +243,7 @@ def srp_candidate_pairs_with_dropped(
     # the r06 plan dumps).
     vecs = embeddings.select(F.col(id_col), F.col(vec_col))
     withv = (
-        cand.drop("source")
-        .join(vecs.withColumnRenamed(id_col, "a").withColumnRenamed(vec_col, "va"), "a")
+        cand.join(vecs.withColumnRenamed(id_col, "a").withColumnRenamed(vec_col, "va"), "a")
         .join(vecs.withColumnRenamed(id_col, "b").withColumnRenamed(vec_col, "vb"), "b")
     )
     pairs = (

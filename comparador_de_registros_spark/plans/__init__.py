@@ -10,6 +10,5 @@ from comparador_de_registros_spark.plans.configs import (  # noqa: F401
     LshConfig,
     MinHashConfig,
     ShingleConfig,
-    SimHashConfig,
     SubstringConfig,
 )

@@ -12,7 +12,7 @@ Float-parity rules used throughout:
 * big aggregated sums rounded to 2 decimals (absorbs partial-agg
   reorder noise), similarity scores to 4.
 
-Signature-based queries (MinHash/SimHash/SRP) have no SQL equivalent —
+Signature-based queries (MinHash/SRP) have no SQL equivalent —
 they are registered without an oracle and get the driver's weaker
 rows-only check; their semantics are pinned by tests/ instead.
 """
@@ -151,8 +151,8 @@ SQL_NGRAM_JACCARD_PAIRS = _sql_jaccard("0.8", "a, b, jaccard")
 
 
 def q_minhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH + SimHash + substring near-dup pairs (char-12 shingle
-    Jaccard >= 0.8). No SQL oracle (signature stage); pinned by
+    """MinHash-LSH + substring near-dup pairs (char-12 shingle Jaccard
+    >= 0.8). No SQL oracle (signature stage); pinned by
     tests/test_dedup_pipeline.py against the brute-force oracle."""
     verified = doc_dedup.signature_dup_pairs(
         _read(spark, sf_dir, "documents"), DedupConfig()

@@ -127,18 +127,17 @@ def test_size_bound_prune_nulls_only_provable_fails(spark):
 def test_unified_candidates_sources_sorted_multi_generator(spark):
     """The bit_or mask reconstruction must reproduce
     array_sort(collect_set(source)): two identical docs are caught by
-    every enabled generator."""
+    both generators."""
     text = "the quick brown fox jumps over the lazy dog " * 10
     docs = spark.createDataFrame(
         [(1, text), (2, text)], "doc_id long, text string"
     )
-    cfg = DedupConfig()
-    verified = doc_dedup.signature_dup_pairs(docs, cfg)
+    verified = doc_dedup.signature_dup_pairs(docs, DedupConfig())
     try:
         rows = verified.collect()
         pair = [r for r in rows if r["a"] == "1" and r["b"] == "2"]
         assert pair, rows
-        assert pair[0]["sources"] == ["lsh", "simhash", "substring"]
+        assert pair[0]["sources"] == ["lsh", "substring"]
         assert pair[0]["is_dup"] is True
     finally:
         doc_dedup.release_signature_run(verified)
