@@ -5,7 +5,8 @@ Local sandbox runs use ``local[N]`` (single JVM); production is
 The knobs below are the scale-relevant ones:
 
 * AQE on (runtime coalescing + skew-join splitting — LSH buckets skew);
-* Arrow on (every Python touchpoint is an Arrow-batched pandas UDF);
+* Arrow on (every Python touchpoint is an Arrow-batched pandas UDF, and
+  driver-built frames ship as Arrow batches: :func:`local_frame`);
 * shuffle partitions sized to cores locally; on a real cluster set
   ``spark.sql.shuffle.partitions`` ~ 2-3x total executor cores.
 """
@@ -14,7 +15,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -55,3 +57,15 @@ def build_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``schema`` field
+    order), shipped to the JVM as Arrow batches: unlike
+    ``createDataFrame(<list>)`` it runs no Python task, each of which
+    pays a fixed worker toll (docs/TUNING.md "Task granularity"). The
+    explicit schema fixes the column types, the empty case included."""
+    import pandas as pd
+
+    pdf = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
+    return spark.createDataFrame(pdf, schema)

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from comparador_de_registros_spark.conf import local_frame
+
 # Bounded-size fast path: below this edge count the component labeling
 # runs as a driver-side union-find over the (already counted) edge set
 # instead of O(log n) distributed rounds. Each distributed round is ~6
@@ -39,6 +41,13 @@ from pyspark.sql import types as T
 # distributed path is IDENTICAL to before. Parameterised for cluster
 # deployments (SPARK_GRAFT_CC_LOCAL_MAX; 0 disables the fast path).
 _CC_LOCAL_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX", "200000"))
+# ... and, for string ids, a byte gate on the same collect: the edge
+# cap is blind to how long the ids are (200k edges of 1 KB ids would
+# collect 400 MB). Raw id bytes of the edge set, observed in the same
+# job as the edge count; 32 MB is 80 B per id at the edge cap, above
+# uuid-sized ids. Fixed-width (long) ids need no gate: the edge cap
+# already bounds their bytes.
+_CC_LOCAL_MAX_BYTES = 32 << 20
 
 
 def _canonical_edges(edges: DataFrame, a: str, b: str) -> DataFrame:
@@ -52,10 +61,13 @@ def _canonical_edges(edges: DataFrame, a: str, b: str) -> DataFrame:
     )
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
+def _large_star(edges: DataFrame, p: int) -> DataFrame:
     """Connect every neighbor larger than u to min(N(u) ∪ {u})."""
-    sym = edges.select("u", "v").unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    # one explicit exchange on u; the groupBy and the join on u reuse it
+    sym = (
+        edges.select("u", "v")
+        .unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .repartition(p, "u")
     )
     mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
     mins = mins.select("u", F.least("mn", "u").alias("m"))
@@ -71,20 +83,22 @@ def _large_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _small_star(edges: DataFrame) -> DataFrame:
+def _small_star(edges: DataFrame, p: int) -> DataFrame:
     """Orient edges large->small; connect N(u) ∪ {u} to the minimum."""
     directed = edges.select(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    )
+    ).repartition(p, "u")
     mins = directed.groupBy("u").agg(F.min("v").alias("m"))
     neighbor_edges = (
         directed.join(mins, "u")
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
     )
     self_edges = mins.select("u", F.col("m").alias("v"))
+    # hash partitioning on u satisfies the (u, v) distinct as well
     return (
         neighbor_edges.unionAll(self_edges)
         .where(F.col("u") != F.col("v"))
+        .repartition(p, "u")
         .distinct()
     )
 
@@ -131,20 +145,20 @@ def _local_components(spark, cur: DataFrame) -> DataFrame:
         m = label.get(r)
         if m is None or node < m:
             label[r] = node
-    data = [(n, label[find(n)]) for n in parent]
+    rows = [(n, label[find(n)]) for n in parent]
     schema = T.StructType(
         [
             T.StructField("conv_id", cur.schema["u"].dataType, True),
             T.StructField("cluster_id", cur.schema["v"].dataType, True),
         ]
     )
-    # broadcast-hint the result: a parallelized local relation carries
-    # no size statistics (defaultSizeInBytes = Long.Max), so without
-    # the hint every caller's singleton-attach join plans as a
-    # sort-merge over the full corpus id table. The row count is
-    # bounded by the fast-path cap (<= 2 * local_max_edges nodes), well
-    # inside broadcast limits; the distributed path below stays unhinted.
-    return F.broadcast(spark.createDataFrame(data, schema))
+    # broadcast-hint the result: a driver-built relation carries no
+    # size statistics (defaultSizeInBytes = Long.Max), so without the
+    # hint every caller's singleton-attach join plans as a sort-merge
+    # over the full corpus id table. The row count is bounded by the
+    # fast-path caps (<= 2 * local_max_edges nodes), well inside
+    # broadcast limits; the distributed path below stays unhinted.
+    return F.broadcast(local_frame(spark, rows, schema))
 
 
 def connected_components(
@@ -159,21 +173,25 @@ def connected_components(
     absent here — the pipeline unions singletons back explicitly.
 
     Graphs at or under ``local_max_edges`` (default
-    ``$SPARK_GRAFT_CC_LOCAL_MAX`` = 200k) are labeled by a driver-side
-    union-find — a bounded collect decided by the edge count the
-    convergence observation already produces for free; larger graphs
-    run the unchanged distributed large-star/small-star rounds."""
+    ``$SPARK_GRAFT_CC_LOCAL_MAX`` = 200k) and, with string ids,
+    ``_CC_LOCAL_MAX_BYTES`` of raw id bytes are labeled by a
+    driver-side union-find — a bounded collect decided by the edge
+    count and id bytes the convergence observation already produces
+    for free; larger graphs run the unchanged distributed
+    large-star/small-star rounds."""
     spark = edges.sparkSession
     obs0 = Observation()
-    cur = (
-        _canonical_edges(edges, a, b)
-        .observe(obs0, *_fingerprint_cols())
-        .localCheckpoint()
-    )
-    n_edges = int(obs0.get["n"] or 0)
+    canon = _canonical_edges(edges, a, b)
+    obs_cols = _fingerprint_cols()
+    if isinstance(canon.schema["u"].dataType, T.StringType):
+        id_bytes = F.sum(F.octet_length("u") + F.octet_length("v"))
+        obs_cols.append(F.coalesce(id_bytes, F.lit(0)).alias("bytes"))
+    cur = canon.observe(obs0, *obs_cols).localCheckpoint()
+    got = obs0.get
+    n_edges = int(got["n"] or 0)
     if local_max_edges is None:
         local_max_edges = _CC_LOCAL_MAX_EDGES
-    if n_edges <= local_max_edges:
+    if n_edges <= local_max_edges and got.get("bytes", 0) <= _CC_LOCAL_MAX_BYTES:
         return _local_components(spark, cur)
     # Right-size the iteration's shuffles to the GRAPH, not the corpus:
     # the dup-pair edge set is orders of magnitude smaller than the
@@ -184,33 +202,29 @@ def connected_components(
     # per reduce task keeps partitions small enough for memory and
     # large enough to amortize task dispatch. ``p`` is RE-DERIVED from
     # each round's observed edge count (large-star rounds can
-    # transiently inflate the edge set well above the input), and the
-    # session conf is restored afterwards — the override window is the
-    # CC driver loop only.
-    sp_key = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(sp_key)
+    # transiently inflate the edge set well above the input) and passed
+    # to the rounds as explicit repartition counts: the session conf is
+    # shared by every concurrent job and stays untouched.
+    max_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def _partitions_for(n: int) -> int:
-        return max(1, min(int(orig), (n + 49_999) // 50_000))
+        return max(1, min(max_p, (n + 49_999) // 50_000))
 
-    spark.conf.set(sp_key, str(_partitions_for(n_edges)))
-    try:
-        prev_fp = None
-        for _ in range(max_iter):
-            obs = Observation()
-            cur = (
-                _small_star(_large_star(cur))
-                .observe(obs, *_fingerprint_cols())
-                .localCheckpoint()
-            )
-            got = obs.get
-            fp = (got["n"], got["h"])
-            if fp == prev_fp:
-                break
-            prev_fp = fp
-            spark.conf.set(sp_key, str(_partitions_for(int(got["n"] or 0))))
-    finally:
-        spark.conf.set(sp_key, orig)
+    p = _partitions_for(n_edges)
+    prev_fp = None
+    for _ in range(max_iter):
+        obs = Observation()
+        cur = (
+            _small_star(_large_star(cur, p), p)
+            .observe(obs, *_fingerprint_cols())
+            .localCheckpoint()
+        )
+        got = obs.get
+        fp = (got["n"], got["h"])
+        if fp == prev_fp:
+            break
+        prev_fp = fp
+        p = _partitions_for(int(got["n"] or 0))
     # converged: every edge points node -> component root
     members = cur.select(F.col("u").alias("conv_id"), F.col("v").alias("cluster_id"))
     roots = cur.select(F.col("v").alias("conv_id")).distinct().withColumn(

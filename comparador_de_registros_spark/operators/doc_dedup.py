@@ -163,10 +163,12 @@ def signature_dup_pairs(
     # both verify-side shingle joins; without a cache the Arrow signing
     # kernel — the most expensive map here — would run once per
     # reference. Spread the input first (a single parquet file scans
-    # into 1-3 splits, serializing the kernel), then persist. The
-    # narrowness probe reads file metadata, not .rdd (scan_is_narrow);
-    # normalization is applied AFTER the spread so it runs on every
-    # core instead of inside the narrow scan's map task (profiled: the
+    # into 1-3 splits, serializing the kernel) over one task per core
+    # (more Python tasks only add the per-task toll, docs/TUNING.md
+    # "Task granularity"), then persist. The narrowness probe reads
+    # file metadata, not .rdd (scan_is_narrow); normalization is
+    # applied AFTER the spread so it runs on every core instead of
+    # inside the narrow scan's map task (profiled: the
     # pre-spread normalize was a ~1.8 s serial task on the bench's
     # single-file corpus — per-row values are partition-independent, so
     # the reorder is output-identical). Everything downstream consumes
@@ -177,9 +179,9 @@ def signature_dup_pairs(
         F.col(id_col).cast("string").alias("conv_id"),
         F.col(text_col).alias("doc"),
     )
-    if scan_is_narrow(spark, base, spark.sparkContext.defaultParallelism):
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        base = base.repartition(n_part, "conv_id")
+    cores = spark.sparkContext.defaultParallelism
+    if scan_is_narrow(spark, base, cores):
+        base = base.repartition(cores, "conv_id")
     convs = base.select(
         "conv_id", normalize_doc_col(F.col("doc")).alias("norm")
     )

@@ -32,7 +32,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from comparador_de_registros_spark.conf import local_frame
 from comparador_de_registros_spark.operators import lsh as lsh_ops
 from comparador_de_registros_spark.operators.assembly import (
     assemble_conversations,
@@ -68,7 +70,15 @@ def _count_if(cond: Column) -> Column:
     return F.sum(F.when(cond, 1).otherwise(0))
 
 
-_LINEAGE_COLS = ["run_id", "stage", "table", "file", "n_rows", "n_bytes", "logged_at"]
+METRICS_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in ("run_id", "stage", "metric")]
+    + [T.StructField(c, T.DoubleType()) for c in ("value", "logged_at")]
+)
+LINEAGE_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in ("run_id", "stage", "table", "file")]
+    + [T.StructField(c, T.LongType()) for c in ("n_rows", "n_bytes")]
+    + [T.StructField("logged_at", T.DoubleType())]
+)
 
 
 @dataclass
@@ -124,9 +134,7 @@ class DedupPipeline:
         if self.metrics_mode == "deferred":
             self._pending_metrics.extend(data)
             return
-        df = spark.createDataFrame(
-            data, ["run_id", "stage", "metric", "value", "logged_at"]
-        )
+        df = local_frame(spark, data, METRICS_SCHEMA)
         name = f"{T_METRICS}/{self.run_id}_{stage}"
         self.catalog.write(df, name, num_files=1)
 
@@ -144,7 +152,7 @@ class DedupPipeline:
             return
         if not data:
             return
-        df = spark.createDataFrame(data, _LINEAGE_COLS)
+        df = local_frame(spark, data, LINEAGE_SCHEMA)
         self.catalog.write(
             df, f"{T_LINEAGE}/{self.run_id}_{stage}_{table.replace('/', '_')}",
             num_files=1,
@@ -154,14 +162,11 @@ class DedupPipeline:
         """Write buffered (deferred-mode) metric + lineage rows, one
         table each."""
         if self._pending_metrics:
-            df = spark.createDataFrame(
-                self._pending_metrics,
-                ["run_id", "stage", "metric", "value", "logged_at"],
-            )
+            df = local_frame(spark, self._pending_metrics, METRICS_SCHEMA)
             self.catalog.write(df, f"{T_METRICS}/{self.run_id}_all", num_files=1)
             self._pending_metrics = []
         if self._pending_lineage:
-            df = spark.createDataFrame(self._pending_lineage, _LINEAGE_COLS)
+            df = local_frame(spark, self._pending_lineage, LINEAGE_SCHEMA)
             self.catalog.write(df, f"{T_LINEAGE}/{self.run_id}_all", num_files=1)
             self._pending_lineage = []
 
@@ -289,12 +294,13 @@ class DedupPipeline:
         # quantity that decides whether the kernel keeps every core
         # busy; comparing against shuffle partitions would add a
         # useless full-docs shuffle on clusters whose scan already
-        # exceeds their cores). At production scale the scan yields
-        # >= thousands of splits and no shuffle happens.
+        # exceeds their cores). ONE task per core, not shuffle
+        # partitions: more Python tasks only add the fixed per-task
+        # toll (docs/TUNING.md "Task granularity"). At production scale
+        # the scan yields >= thousands of splits and no shuffle happens.
         cores = spark.sparkContext.defaultParallelism
         if scan_is_narrow(spark, docs, cores):
-            n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            reps = reps.repartition(n_part, "conv_id")
+            reps = reps.repartition(cores, "conv_id")
         sigs = compute_signatures(reps, self.cfg)
         # no repartition below: the docs table is already spread by
         # conv_id and mapInPandas preserves partitioning — an extra

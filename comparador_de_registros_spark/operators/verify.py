@@ -50,6 +50,16 @@ def union_candidates(*pair_dfs: DataFrame) -> DataFrame:
 
 _OVERLAP_UDFS: dict[int, object] = {}
 
+# Small plan at or under this many candidates: the LCS ladder runs as
+# ONE Python task instead of one per inherited partition, each of which
+# pays a fixed worker toll of ~0.2 CPU-s (docs/TUNING.md "Task
+# granularity"). Bound = the largest measured count where one task was
+# not slower, with every candidate in the ladder (the worst case), 4
+# cores, median verify wall vs the inherited spread: 8 KB docs 250
+# pairs 1.56 vs 1.63 s, 500 1.59 vs 1.48 s, 2,000 2.77 vs 1.97 s; 1 KB
+# docs 500 1.15 vs 1.21 s, 3,000 1.14 vs 0.98 s.
+_LADDER_ONE_TASK_MAX = 250
+
 
 def _overlap_udf(a, b, min_overlap: int):
     """Arrow-batched column deciding LCS(a, b) >= min_overlap via
@@ -394,7 +404,7 @@ def verify_pairs(
             .withColumnRenamed("norm", "norm_b")
         )
         if not (small or broadcast_sigs):
-            # EXPLICIT spread before the LCS UDF — LARGE plan only: the
+            # EXPLICIT spread before the LCS UDF — LARGE plan: the
             # residue is small relative to the corpus, so AQE coalesces
             # the join output to 1-2 partitions and the per-pair
             # rolling-hash kernel runs as a SERIAL tail — a fixed cost
@@ -402,9 +412,11 @@ def verify_pairs(
             # efficiency (measured: ~20s of the 1->4 executor fixed
             # cost at 10M turns). An explicit count is
             # AQE-coalescing-exempt. On the small/medium (broadcast)
-            # plans the residue is tiny and the extra exchange is pure
-            # fixed cost.
+            # plans the UDF runs over the partitions the joins inherit,
+            # except for the smallest candidate sets: one task there.
             with_norms = with_norms.repartition(n_part, "a", "b")
+        elif small and n_candidates <= _LADDER_ONE_TASK_MAX:
+            with_norms = with_norms.repartition(1, "a", "b")
         with_norms = (
             with_norms
             .withColumn(

@@ -20,11 +20,16 @@ than however the last shuffle left them.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class Catalog:
@@ -64,7 +69,35 @@ class ParquetCatalog(Catalog):
         return os.path.exists(os.path.join(self.path(name), "_SUCCESS"))
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self.path(name))
+        """The table, with its schema taken from a part file's footer
+        when Spark wrote it: schema inference runs a Spark job per read
+        (measured on 4 cores: ~100 ms per read, ~20 ms with the schema
+        given; a pipeline run reads about 11 tables). Other tables are
+        read with inference."""
+        path = self.path(name)
+        schema = self._footer_schema(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path)
+
+    @staticmethod
+    def _footer_schema(root: str) -> T.StructType | None:
+        """The Spark schema in the footer of the first part file directly
+        under ``root``; None if there is no such file (a partitioned or
+        missing table) or it carries no Spark schema (another writer)."""
+        import pyarrow.parquet as pq
+
+        try:
+            names = sorted(
+                f for f in os.listdir(root)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            )
+        except FileNotFoundError:
+            return None
+        if not names:
+            return None
+        meta = pq.read_metadata(os.path.join(root, names[0])).metadata or {}
+        raw = meta.get(_SPARK_SCHEMA_KEY)
+        return None if raw is None else T.StructType.fromJson(json.loads(raw))
 
     def write(
         self,

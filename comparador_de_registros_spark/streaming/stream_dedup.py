@@ -27,7 +27,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from comparador_de_registros_spark.conf import local_frame
 from comparador_de_registros_spark.operators.assembly import normalize_doc_col
 from comparador_de_registros_spark.operators.signatures import (
     SIGNATURE_SCHEMA,
@@ -44,6 +46,10 @@ from comparador_de_registros_spark.streaming.incremental import (
 )
 
 TURN_SEPARATOR = "\n"
+
+DOCS_NORM_SCHEMA = T.StructType(
+    [T.StructField("conv_id", T.StringType()), T.StructField("norm", T.StringType())]
+)
 
 
 def assemble_sessionized(
@@ -102,7 +108,7 @@ class StreamingDedup:
         return f"{self.workdir}/{name}"
 
     def _read_state(
-        self, spark: SparkSession, name: str, schema, before_batch: int
+        self, spark: SparkSession, name: str, schema: T.StructType, before_batch: int
     ) -> DataFrame:
         """State accumulated by batches < ``before_batch`` (replay
         safety: a replayed batch must not see its own earlier,
@@ -120,7 +126,7 @@ class StreamingDedup:
         fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
         if not fs.exists(hpath):
             # first batch: no state yet
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         # pre-round-3 workdirs stored flat parquet files with a
         # batch_id DATA column (append mode); partition discovery
         # over a mix of root-level files and batch_id=N dirs fails
@@ -167,7 +173,7 @@ class StreamingDedup:
             )
             all_sigs = corpus_sigs.unionByName(sigs_new)
             all_norms = self._read_state(
-                spark, "docs_norm", "conv_id string, norm string", batch_id
+                spark, "docs_norm", DOCS_NORM_SCHEMA, batch_id
             ).unionByName(new.select("conv_id", "norm"))
             verified = verify_pairs(cand, all_sigs, all_norms, self.cfg)
             try:

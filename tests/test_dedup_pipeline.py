@@ -228,6 +228,38 @@ def test_connected_components_local_matches_distributed(spark):
     )
 
 
+def test_connected_components_local_path_byte_gate(spark, monkeypatch):
+    """With string ids the driver union-find runs only under BOTH caps:
+    edges and raw id bytes (UTF-8 octets). Over the byte cap the
+    distributed rounds label the same components."""
+    from comparador_de_registros_spark.operators import cluster
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], ["a", "b"]
+    )
+    want = sorted(map(tuple, connected_components(edges).collect()))
+
+    def local_forbidden(*_args):
+        raise AssertionError("driver union-find taken over the byte cap")
+
+    # 3 edges = 6 one-byte ids
+    with monkeypatch.context() as m:
+        m.setattr(cluster, "_CC_LOCAL_MAX_BYTES", 5)
+        m.setattr(cluster, "_local_components", local_forbidden)
+        got = sorted(map(tuple, connected_components(edges).collect()))
+    assert got == want
+    # at the cap exactly, the local path is taken
+    calls = []
+    real = cluster._local_components
+    monkeypatch.setattr(
+        cluster, "_local_components",
+        lambda s, cur: calls.append(1) or real(s, cur),
+    )
+    monkeypatch.setattr(cluster, "_CC_LOCAL_MAX_BYTES", 6)
+    connected_components(edges).collect()
+    assert calls == [1]
+
+
 def test_pipeline_recall_vs_oracle(spark, pipeline_result):
     catalog, pipe, clusters = pipeline_result
     docs = catalog.read(spark, T_DOCS)
