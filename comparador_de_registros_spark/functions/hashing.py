@@ -11,7 +11,8 @@ Algorithms are standard published constructions:
   universal 64-bit mixer;
 * polynomial rolling k-gram hashes computed via invertible-base prefix
   sums (base odd => invertible mod 2^64), fully vectorized;
-* MinHash as min over k seeded mixes (Broder 1997);
+* one-permutation MinHash with circular densification (Li/Owen/Zhang
+  2012, Shrivastava/Li 2014);
 * winnowing fingerprint selection (Schleimer/Wilkerson/Aiken 2003).
 """
 
@@ -39,27 +40,6 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
         z = (z ^ (z >> _U64(30))) * _MIX1
         z = (z ^ (z >> _U64(27))) * _MIX2
         return z ^ (z >> _U64(31))
-
-
-def hash_bytes(data: bytes, seed: int = 0) -> int:
-    """Deterministic 64-bit hash of a byte string (polynomial + mix)."""
-    arr = np.frombuffer(data, dtype=np.uint8).astype(_U64)
-    n = len(arr)
-    with np.errstate(over="ignore"):
-        h = _U64(0)
-        if n:
-            # sum(a[i] * B^(n-1-i)) via cumulative powers
-            pows = np.empty(n, dtype=_U64)
-            pows[0] = _U64(1)
-            if n > 1:
-                np.multiply.accumulate(
-                    np.full(n - 1, _POLY_BASE, dtype=_U64), out=pows[1:]
-                )
-            h = _U64((arr * pows[::-1]).sum())
-        mixed = splitmix64(
-            np.array([h ^ _U64(seed & 0xFFFFFFFFFFFFFFFF)], dtype=_U64)
-        )
-        return int(mixed[0])
 
 
 # power tables grow-on-demand and are reused across calls: the
@@ -148,42 +128,6 @@ def char_shingles(text: str, k: int, seed: int = 0) -> np.ndarray:
     return np.unique(rolling_kgram_hashes(text.encode("utf-8"), k, seed))
 
 
-def word_shingles(text: str, k: int, seed: int = 0) -> np.ndarray:
-    """Distinct hashed k-token shingles (tokens joined by 0x1f)."""
-    tokens = text.split()
-    if len(tokens) < k:
-        joined = "\x1f".join(tokens)
-        if not joined:
-            return np.empty(0, dtype=_U64)
-        return np.array([hash_bytes(joined.encode("utf-8"), seed)], dtype=_U64)
-    grams = [
-        "\x1f".join(tokens[i : i + k]).encode("utf-8")
-        for i in range(len(tokens) - k + 1)
-    ]
-    return np.unique(
-        np.array([hash_bytes(g, seed) for g in grams], dtype=_U64)
-    )
-
-
-def minhash_signature(
-    shingles: np.ndarray, seeds: np.ndarray, empty_fill: int = 0
-) -> np.ndarray:
-    """MinHash signature: for each seed, min over splitmix64(x ^ seed).
-    Returns int32 (top 32 bits of the 64-bit min) — 4 bytes/perm keeps
-    the signature table at ~0.5 KB/doc for 128 perms at 10^12 scale."""
-    p = len(seeds)
-    if len(shingles) == 0:
-        return np.full(p, empty_fill, dtype=np.int32)
-    with np.errstate(over="ignore"):
-        # chunk the outer product to bound memory at ~8 MB per doc
-        mins = np.full(p, np.iinfo(np.uint64).max, dtype=_U64)
-        chunk = max(1, (1 << 20) // p)
-        for start in range(0, len(shingles), chunk):
-            block = shingles[start : start + chunk, None] ^ seeds[None, :]
-            np.minimum(mins, splitmix64(block).min(axis=0), out=mins)
-        return (mins >> _U64(32)).astype(np.int64).astype(np.int32)
-
-
 def oph_signature(
     shingles: np.ndarray, num_perm: int, empty_fill: int = 0
 ) -> np.ndarray:
@@ -192,9 +136,10 @@ def oph_signature(
     64-bit shingle hash by its top ``log2(num_perm)`` bits, take the
     minimum hash per bucket (one pass — no per-permutation re-hashing),
     splitmix-finalize it, and fill empty buckets from the nearest
-    occupied bucket to the left (circular). Same int32 top-32-bit output
-    form as :func:`minhash_signature`; collision probability per bucket
-    is J like classic MinHash, at ~1/num_perm of the hashing cost."""
+    occupied bucket to the left (circular). Returns int32 (top 32 bits
+    of each 64-bit minimum) — 4 bytes/perm keeps the signature table at
+    ~0.5 KB/doc for 128 perms; collision probability per bucket is J
+    like classic MinHash, at ~1/num_perm of the hashing cost."""
     p = num_perm
     if p & (p - 1):
         raise ValueError("num_perm must be a power of two for OPH")
@@ -218,6 +163,8 @@ def oph_signature(
 
 
 def make_seeds(num: int, seed: int) -> np.ndarray:
+    """``num`` k-permutation MinHash seeds. The engine signs with OPH and
+    uses none; kept for callers that still build them."""
     return splitmix64(
         np.arange(1, num + 1, dtype=_U64) * _GOLDEN ^ _U64(seed & 0xFFFFFFFFFFFFFFFF)
     )

@@ -21,8 +21,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,9 +36,8 @@ from comparador_de_registros_spark.conf import local_frame
 # The cap bounds driver memory (~200k edges ≈ tens of MB of Python
 # objects, far under the 8 GB driver heap) the same way the IVF
 # centroid collect and broadcast thresholds do; above it the
-# distributed path is IDENTICAL to before. Parameterised for cluster
-# deployments (SPARK_GRAFT_CC_LOCAL_MAX; 0 disables the fast path).
-_CC_LOCAL_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX", "200000"))
+# distributed path is IDENTICAL to before.
+_CC_LOCAL_MAX_EDGES = 200_000
 # ... and, for string ids, a byte gate on the same collect: the edge
 # cap is blind to how long the ids are (200k edges of 1 KB ids would
 # collect 400 MB). Raw id bytes of the edge set, observed in the same
@@ -173,7 +170,7 @@ def connected_components(
     absent here — the pipeline unions singletons back explicitly.
 
     Graphs at or under ``local_max_edges`` (default
-    ``$SPARK_GRAFT_CC_LOCAL_MAX`` = 200k) and, with string ids,
+    ``_CC_LOCAL_MAX_EDGES`` = 200k) and, with string ids,
     ``_CC_LOCAL_MAX_BYTES`` of raw id bytes are labeled by a
     driver-side union-find — a bounded collect decided by the edge
     count and id bytes the convergence observation already produces

@@ -135,13 +135,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _docs_as_convs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return docs.select(
-        F.col(id_col).cast("string").alias("conv_id"),
-        F.col(text_col).alias("doc"),
-    ).withColumn("norm", normalize_doc_col(F.col("doc")))
-
-
 def signature_dup_pairs(
     docs: DataFrame,
     cfg: DedupConfig | None = None,
@@ -186,9 +179,7 @@ def signature_dup_pairs(
         "conv_id", normalize_doc_col(F.col("doc")).alias("norm")
     )
     sigs = compute_signatures(convs, cfg).persist()
-    cand, _, _ = lsh_ops.unified_candidates(
-        sigs, cfg.lsh, use_substring=cfg.use_substring
-    )
+    cand, _, _ = lsh_ops.unified_candidates(sigs, cfg.lsh)
     # persist the (slim) candidate pairs: verify_pairs consumes the
     # candidates plan more than once — the participant id set it
     # broadcasts for the shared sig exchange, plus the pair joins. In

@@ -44,15 +44,17 @@ def unified_candidates(
     simhash_cfg: None = None,
     use_substring: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Every enabled generator through ONE shuffle.
+    """Both generators through ONE shuffle.
 
     One explode -> groupBy per generator would shuffle the signature
     table once each (~2x the stage-scheduling overhead), and at scale
     the bucket grouping dominates the candidates stage; so the key
     streams are unioned under a (gen, key1, key2) composite key and
     grouped ONCE. ``simhash_cfg`` is the slot of the removed SimHash
-    generator (plans/configs.py: ``DedupConfig.use_simhash``); it is
-    kept so positional callers keep working and must be None.
+    generator (plans/configs.py: ``DedupConfig.use_simhash``) and must
+    be None; ``use_substring`` is the slot of the retired switch that
+    turned the anchor generator off and must be True. Both are kept so
+    positional callers keep working.
 
     -> (candidates(a, b, sources), dropped(generator, sz), buckets)
 
@@ -67,6 +69,8 @@ def unified_candidates(
     """
     if simhash_cfg is not None:
         raise ValueError("SimHash blocking was removed; pass None")
+    if use_substring is not True:
+        raise ValueError("the substring generator always runs; pass True")
     # The generator tag is an INT id (0=lsh, 1=substring): narrower
     # shuffle key (4 B vs an 8-11 B string) and cheaper hashing/compare
     # in the bucket groupBy. (A single-pass variant building one
@@ -76,19 +80,17 @@ def unified_candidates(
     keyed = signatures.select(
         "conv_id",
         F.posexplode(lsh_band_keys("minhash", lsh_cfg)).alias("k1", "k2"),
-    ).select("conv_id", F.lit(0).alias("g"), "k1", "k2")
-    if use_substring:
-        keyed = keyed.unionByName(
-            signatures.select(
-                "conv_id",
-                F.explode("anchors").alias("anchor"),
-            ).select(
-                "conv_id",
-                F.lit(1).alias("g"),
-                F.lit(0).alias("k1"),
-                F.hash("anchor").alias("k2"),
-            )
+    ).select("conv_id", F.lit(0).alias("g"), "k1", "k2").unionByName(
+        signatures.select(
+            "conv_id",
+            F.explode("anchors").alias("anchor"),
+        ).select(
+            "conv_id",
+            F.lit(1).alias("g"),
+            F.lit(0).alias("k1"),
+            F.hash("anchor").alias("k2"),
         )
+    )
 
     sized = keyed.groupBy("g", "k1", "k2").agg(
         F.collect_list("conv_id").alias("members"),

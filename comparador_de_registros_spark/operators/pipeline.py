@@ -53,6 +53,8 @@ from comparador_de_registros_spark.plans.configs import DedupConfig
 from comparador_de_registros_spark.sources.catalog import Catalog
 
 STAGES = ("assemble", "exact", "sign", "candidates", "verify", "cluster")
+# the candidate generators, by the names they carry in ``sources``
+GENERATORS = ("lsh", "substring")
 
 T_DOCS = "docs"
 T_EXACT = "exact_map"
@@ -169,11 +171,6 @@ class DedupPipeline:
             df = local_frame(spark, self._pending_lineage, LINEAGE_SCHEMA)
             self.catalog.write(df, f"{T_LINEAGE}/{self.run_id}_all", num_files=1)
             self._pending_lineage = []
-
-    def _generators(self) -> list[str]:
-        """The candidate generators this config enables (the names they
-        carry in the ``sources`` column)."""
-        return ["lsh", "substring"] if self.cfg.use_substring else ["lsh"]
 
     # --- stages ------------------------------------------------------------
 
@@ -320,15 +317,13 @@ class DedupPipeline:
         sigs = self.catalog.read(spark, T_SIGN)
         if self.cfg.encode_ids:
             sigs = self._encode_col(sigs, self._id_map(spark), "conv_id")
-        cand, dropped, buckets = lsh_ops.unified_candidates(
-            sigs, self.cfg.lsh, use_substring=self.cfg.use_substring
-        )
+        cand, dropped, buckets = lsh_ops.unified_candidates(sigs, self.cfg.lsh)
         # the candidates and dropped-buckets writes are two actions over
         # the same grouped bucket table; persist it so the big
         # explode->groupBy shuffle runs once, not twice
         buckets.persist()
         metric_cols = {"n_candidates": F.count(F.lit(1))}
-        for gen in self._generators():
+        for gen in GENERATORS:
             metric_cols[f"n_candidates_{gen}"] = _count_if(
                 F.array_contains("sources", gen)
             )
@@ -396,7 +391,7 @@ class DedupPipeline:
         }
         # per-generator dups, and the MARGINAL dups only that generator
         # found (sources == [gen]): what each generator pays for itself
-        for gen in self._generators():
+        for gen in GENERATORS:
             metric_cols[f"n_dups_{gen}"] = _count_if(
                 dup & F.array_contains("sources", gen)
             )

@@ -28,7 +28,7 @@ Scale notes:
   here and the verify stage joins them by conv_id instead of
   recomputing;
 * kernel memory is bounded by sub-batching (~2 MB of text per kernel
-  call) and by chunking the MinHash seed columns (~32 MB mix buffer).
+  call).
 """
 
 from __future__ import annotations
@@ -142,22 +142,22 @@ def _split_to_lists(vals: np.ndarray, counts: np.ndarray) -> list[np.ndarray]:
 def batch_signatures(
     texts: list[str],
     cfg: DedupConfig,
-    seeds: np.ndarray,
+    seeds: np.ndarray | None = None,
 ) -> dict[str, list]:
     """Vectorized signature kernel over a list of normalized documents.
 
     Bit-for-bit equal to running the per-doc primitives
-    (H.char_shingles, H.oph_signature / H.minhash_signature,
-    H.winnow + stored_shingles) on each text. Returns columns ready for
-    a pandas DataFrame.
+    (H.char_shingles, H.oph_signature, H.winnow + stored_shingles) on
+    each text. Returns columns ready for a pandas DataFrame. ``seeds``
+    is ignored: OPH needs no per-permutation seeds (the argument stays
+    for callers that still pass it).
     """
     sh_cfg, sub_cfg = cfg.shingle, cfg.substring
     k = sh_cfg.k
-    use_sub = cfg.use_substring
     n = len(texts)
     enc = [t.encode("utf-8") for t in texts]
     lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=n)
-    pad = (max(k, sub_cfg.gram) if use_sub else k) - 1
+    pad = max(k, sub_cfg.gram) - 1
     buf = (b"\x00" * pad).join(enc)
     off = np.zeros(n, dtype=np.int64)
     if n > 1:
@@ -189,7 +189,7 @@ def batch_signatures(
     mh = np.zeros((n, p), dtype=np.int32)  # empty docs keep fill 0
     nz = n_sh > 0
     total_u = len(uvals)
-    if total_u and cfg.minhash.scheme == "oph":
+    if total_u:
         # One-permutation hashing: uvals is sorted ascending (unsigned)
         # within each doc, so the min of every (doc, top-bits bucket)
         # run is simply its FIRST element — the whole signature batch is
@@ -218,55 +218,36 @@ def batch_signatures(
             np.concatenate([m, m], axis=1), idx, axis=1
         )[:, p:]
         mh[nz] = (filled[nz] >> _U64(32)).astype(np.int64).astype(np.int32)
-    elif total_u:
-        # classic k-perm Broder MinHash: per-doc segment loop (the mix
-        # block stays L2-resident; a global column- or row-blocked
-        # variant measured slower — reduceat and DRAM-sized temporaries)
-        seg_starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(n_sh[:-1], out=seg_starts[1:])
-        with np.errstate(over="ignore"):
-            for d in np.flatnonzero(nz):
-                seg = uvals[seg_starts[d] : seg_starts[d] + n_sh[d]]
-                mixed = H.splitmix64(seg[:, None] ^ seeds[None, :])
-                mh[d] = (
-                    (mixed.min(axis=0) >> _U64(32))
-                    .astype(np.int64)
-                    .astype(np.int32)
-                )
 
     # --- winnowed substring anchors ---------------------------------------
-    if use_sub:
-        gram, window = sub_cfg.gram, sub_cfg.window
-        grams_g = H.windows_from_prefix(prefix, gram, sub_cfg.seed)
-        cnt_g = np.where(
-            lens >= sub_cfg.min_doc_len, np.maximum(lens - gram + 1, 0), 0
-        )
-        gvals, _ = _segment_gather(grams_g, off, cnt_g)
-        gstarts = np.zeros(n, dtype=np.int64)
-        np.cumsum(cnt_g[:-1], out=gstarts[1:])
-        # big segments: one global O(n) sliding-min scan, window starts
-        # selected by position so runs never straddle a document
-        w_cnt = np.where(cnt_g >= window, cnt_g - window + 1, 0)
-        sm = _sliding_min(gvals, window)
-        avals, adocs = _segment_gather(sm, gstarts, w_cnt)
-        # small segments (0 < cnt < window): single min over the segment
-        small = (cnt_g > 0) & (cnt_g < window)
-        if small.any():
-            nzg = cnt_g > 0
-            seg_mins = np.minimum.reduceat(gvals, gstarts[nzg])
-            sel = small[nzg]
-            avals = np.concatenate([avals, seg_mins[sel]])
-            adocs = np.concatenate([adocs, np.flatnonzero(nzg)[sel]])
-            aorder = np.lexsort((avals, adocs))
-            avals, adocs = avals[aorder], adocs[aorder]
-        else:
-            _sort_segments(avals, w_cnt)
-        ua, ud = _dedupe_sorted(avals, adocs)
-        a_cnt = np.bincount(ud, minlength=n)
-        anchors = _split_to_lists(ua.astype(np.int64), a_cnt)
+    gram, window = sub_cfg.gram, sub_cfg.window
+    grams_g = H.windows_from_prefix(prefix, gram, sub_cfg.seed)
+    cnt_g = np.where(
+        lens >= sub_cfg.min_doc_len, np.maximum(lens - gram + 1, 0), 0
+    )
+    gvals, _ = _segment_gather(grams_g, off, cnt_g)
+    gstarts = np.zeros(n, dtype=np.int64)
+    np.cumsum(cnt_g[:-1], out=gstarts[1:])
+    # big segments: one global O(n) sliding-min scan, window starts
+    # selected by position so runs never straddle a document
+    w_cnt = np.where(cnt_g >= window, cnt_g - window + 1, 0)
+    sm = _sliding_min(gvals, window)
+    avals, adocs = _segment_gather(sm, gstarts, w_cnt)
+    # small segments (0 < cnt < window): single min over the segment
+    small = (cnt_g > 0) & (cnt_g < window)
+    if small.any():
+        nzg = cnt_g > 0
+        seg_mins = np.minimum.reduceat(gvals, gstarts[nzg])
+        sel = small[nzg]
+        avals = np.concatenate([avals, seg_mins[sel]])
+        adocs = np.concatenate([adocs, np.flatnonzero(nzg)[sel]])
+        aorder = np.lexsort((avals, adocs))
+        avals, adocs = avals[aorder], adocs[aorder]
     else:
-        empty = np.empty(0, dtype=np.int64)
-        anchors = [empty] * n
+        _sort_segments(avals, w_cnt)
+    ua, ud = _dedupe_sorted(avals, adocs)
+    a_cnt = np.bincount(ud, minlength=n)
+    anchors = _split_to_lists(ua.astype(np.int64), a_cnt)
 
     return {
         "n_shingles": n_sh.astype(np.int32),
@@ -335,11 +316,8 @@ def compute_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     before crossing into Python, so the Arrow transfer carries the
     minimal payload; the Python side runs the batched kernel above.
     """
-    mh_cfg = cfg.minhash
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seeds = H.make_seeds(mh_cfg.num_perm, mh_cfg.seed)
-
         for pdf in batches:
             texts = [(t or "") for t in pdf["norm"]]
             ids = pdf["conv_id"].reset_index(drop=True)
@@ -350,7 +328,7 @@ def compute_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
                 while end < len(texts) and (budget > 0 or end == start):
                     budget -= len(texts[end])
                     end += 1
-                cols = batch_signatures(texts[start:end], cfg, seeds)
+                cols = batch_signatures(texts[start:end], cfg)
                 out = {"conv_id": ids.iloc[start:end].reset_index(drop=True)}
                 out.update(cols)
                 yield pd.DataFrame(out)

@@ -1,8 +1,9 @@
 """Verification: exact Jaccard on shingle sets + substring overlap.
 
-Candidates from all generators are unioned, de-duplicated, then
-verified natively: ``size(array_intersect)/size(array_union)`` over the
-stored shingle arrays (no Python). Pairs that came from the substring
+Candidate pairs (one row per pair, the generators that found it in
+``sources``) are verified natively:
+``size(array_intersect)/size(array_union)`` over the stored shingle
+arrays (no Python). Pairs that came from the substring
 generator and fail the Jaccard threshold get the substring ladder:
 
 1. full containment (one normalized doc embedded in the other) —
@@ -37,18 +38,41 @@ from pyspark.sql.functions import pandas_udf
 from comparador_de_registros_spark.plans.configs import DedupConfig
 
 
-def union_candidates(*pair_dfs: DataFrame) -> DataFrame:
-    """UNION the generator outputs, keeping the set of sources per pair."""
-    out = None
-    for df in pair_dfs:
-        out = df if out is None else out.unionByName(df)
-    return (
-        out.groupBy("a", "b")
-        .agg(F.array_sort(F.collect_set("source")).alias("sources"))
-    )
-
-
 _OVERLAP_UDFS: dict[int, object] = {}
+
+# Verify plan split points (measured on the round-4/5 benches; the
+# sweep behind them is in docs/TUNING.md "Verify plan selection").
+#
+# Small plan: when the caller KNOWS the candidate pair count (e.g.
+# signature_dup_pairs materializes its candidate cache) and it is at
+# most this, verify joins broadcast the pair side directly into the
+# cached signature table — zero sig-table exchanges, the optimal
+# small-corpus plan. Above it (or when the count is unknown) verify
+# uses the shared participant-filtered sig exchange, the optimal
+# large-corpus plan (round-4 verdict: verify shuffle bytes). Only the
+# slim (a, b, sources) pair table is ever broadcast (~50 B/row -> ~10
+# MB at the threshold); the fat shingle arrays stay partitioned.
+_SMALL_CANDIDATES_MAX = 200_000
+
+# Medium plan: when the pair count is known but above
+# _SMALL_CANDIDATES_MAX, verify counts the distinct participants (one
+# job over the caller's cached pair table); if at most this many, the
+# participant-filtered sig table is BROADCAST into both shingle joins
+# instead of exchanged — the pair side then never shuffles at all.
+# Byte budget: 200k participants * ~1.1 KB avg sig row ≈ 220 MB
+# broadcast, inside the 8 GB/512M-row broadcast cap and comfortable for
+# an 8 GB driver; above it the large shared-exchange plan (the 100 TB
+# shape) applies. Measured at 50k docs / 2.76M candidates (sf1.0
+# bench): scored stage 15.3s (shared exchange) -> 12.4s (broadcast
+# sigs), and no sort of the fat pair rows.
+_BROADCAST_SIGS_MAX = 200_000
+
+# Byte companion to the count gate above: estimated broadcast size
+# (participants * (avg_shingles * 4 B + row overhead) * 2) must stay
+# under this, pricing FAT sig rows (assembled conversations carry 10x a
+# short doc's shingles) out of the broadcast plan that a pure count cap
+# would admit.
+_BROADCAST_SIGS_MAX_BYTES = 256 * 1024 * 1024
 
 # Small plan at or under this many candidates: the LCS ladder runs as
 # ONE Python task instead of one per inherited partition, each of which
@@ -122,7 +146,7 @@ def verify_pairs(
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     small = (
         n_candidates is not None
-        and n_candidates <= cfg.verify_small_candidates_max
+        and n_candidates <= _SMALL_CANDIDATES_MAX
     )
     broadcast_sigs = False
     ids_cached = None
@@ -145,7 +169,7 @@ def verify_pairs(
             .persist()
         )
         n_participants = ids_cached.count()
-        broadcast_sigs = n_participants <= cfg.verify_broadcast_sigs_max
+        broadcast_sigs = n_participants <= _BROADCAST_SIGS_MAX
         if broadcast_sigs:
             # Byte-aware second gate: the count cap alone is blind to how
             # FAT a sig row is (a 300-char doc carries ~285 shingles
@@ -160,7 +184,7 @@ def verify_pairs(
                 or 0.0
             )
             est_bytes = n_participants * (avg_sh * 4 + 64) * 2
-            broadcast_sigs = est_bytes <= cfg.verify_broadcast_sigs_max_bytes
+            broadcast_sigs = est_bytes <= _BROADCAST_SIGS_MAX_BYTES
         if not broadcast_sigs:
             ids_cached.unpersist()
             ids_cached = None
@@ -184,8 +208,8 @@ def verify_pairs(
         # Medium plan: broadcast the participant-filtered sig side into
         # BOTH joins. The pair side is never exchanged at all; the only
         # data movement is the one broadcast (n_participants * avg sig
-        # bytes, capped by verify_broadcast_sigs_max — see configs.py
-        # for the byte math).
+        # bytes, capped by _BROADCAST_SIGS_MAX and
+        # _BROADCAST_SIGS_MAX_BYTES).
         sigb = F.broadcast(
             signatures.select("conv_id", "shingles")
             .join(F.broadcast(ids_cached), "conv_id", "left_semi")
@@ -205,7 +229,13 @@ def verify_pairs(
         # side). Structure:
         # 1. left_semi against the candidate participants drops every
         #    conversation that appears in no pair (exactness preserved —
-        #    the downstream joins are inner on those same ids);
+        #    the downstream joins are inner on those same ids). The id
+        #    set is broadcast statically: an AQE-converted broadcast
+        #    arrives AFTER the sig exchange was submitted, leaving the
+        #    filter post-shuffle where it saves nothing (measured at
+        #    600k base; the static filter cut verify bytes 27% at 150k).
+        #    The driver must be able to broadcast the distinct
+        #    participant ids (~100M int64 ids at most);
         # 2. one explicit repartition by conv_id; both join sides
         #    project conv_id under an alias, so alias-aware output
         #    partitioning satisfies BOTH joins' distribution
@@ -215,15 +245,11 @@ def verify_pairs(
         #    sig-table exchanges total instead of 2 full ones; the
         #    unavoidable per-pair cost is the sh_a array riding join 2's
         #    pair-keyed exchange once.
-        ids = candidates.select(
-            F.explode(F.array("a", "b")).alias("conv_id")
-        ).distinct()
-        if cfg.broadcast_participants:
-            # static broadcast: an AQE-converted broadcast arrives AFTER
-            # the sig exchange was submitted (both sides scheduled in
-            # parallel), leaving the filter post-shuffle where it saves
-            # nothing (measured at 600k base)
-            ids = F.broadcast(ids)
+        ids = F.broadcast(
+            candidates.select(
+                F.explode(F.array("a", "b")).alias("conv_id")
+            ).distinct()
+        )
         sigp = (
             signatures.select("conv_id", "shingles")
             .join(ids, "conv_id", "left_semi")
@@ -327,133 +353,128 @@ def verify_pairs(
         .withColumn("overlap", F.lit(False))
     )
 
-    if cfg.use_substring:
-        # same shared-exchange shape as the shingle joins: the ladder
-        # residue is a small pair set, so the participant semi-join
-        # prunes the docs table hard before its single norm exchange
-        # the residue id set is BROADCAST explicitly: Spark's size
-        # estimate for a distinct over the cached scored table is
-        # unknown, so without the hint AQE plans an SMJ semi and the
-        # full docs norm column crosses an exchange before the runtime
-        # size is known (measured: 139 MB at 150k base for a ~1 MB id
-        # set). The residue is structurally small — substring-sourced
-        # candidates that FAILED Jaccard, bounded by the anchor
-        # generator's bucket caps — and if it ever outgrew Spark's
-        # broadcast limit the job fails loudly rather than silently.
-        if small or broadcast_sigs:
-            # Small/medium plans: seed the semi-join with the CANDIDATE
-            # participants instead of the ladder residue's. The id set
-            # is a superset (residue pairs are candidates), and the
-            # with_norms joins below are inner on the residue's a/b, so
-            # extra d rows are never matched — output identical. What it
-            # buys: the residue ids depend on the scored branch, so the
-            # ids -> d broadcast builds were NESTED under scored's and
-            # the three broadcasts serialized (profiled: three ~1.1 s
-            # jobs back-to-back at bench scale); candidate ids depend
-            # only on the (cached/checkpointed) pair table, letting the
-            # norm broadcast build in parallel with scored. Byte bound
-            # unchanged in the worst case (the residue can BE the whole
-            # candidate set); on the medium plan participant norms are
-            # ~1/4 of the shingle broadcast the byte gate already
-            # priced. The large plan keeps residue-derived ids — at
-            # scale the superset would broadcast norms for millions of
-            # participants whose pairs never reach the ladder.
-            if ids_cached is not None:
-                ids_sub = F.broadcast(ids_cached)
-            else:
-                ids_sub = F.broadcast(
-                    candidates.select(
-                        F.explode(F.array("a", "b")).alias("conv_id")
-                    ).distinct()
-                )
+    # same shared-exchange shape as the shingle joins: the ladder
+    # residue is a small pair set, so the participant semi-join
+    # prunes the docs table hard before its single norm exchange
+    # the residue id set is BROADCAST explicitly: Spark's size
+    # estimate for a distinct over the cached scored table is
+    # unknown, so without the hint AQE plans an SMJ semi and the
+    # full docs norm column crosses an exchange before the runtime
+    # size is known (measured: 139 MB at 150k base for a ~1 MB id
+    # set). The residue is structurally small — substring-sourced
+    # candidates that FAILED Jaccard, bounded by the anchor
+    # generator's bucket caps — and if it ever outgrew Spark's
+    # broadcast limit the job fails loudly rather than silently.
+    if small or broadcast_sigs:
+        # Small/medium plans: seed the semi-join with the CANDIDATE
+        # participants instead of the ladder residue's. The id set
+        # is a superset (residue pairs are candidates), and the
+        # with_norms joins below are inner on the residue's a/b, so
+        # extra d rows are never matched — output identical. What it
+        # buys: the residue ids depend on the scored branch, so the
+        # ids -> d broadcast builds were NESTED under scored's and
+        # the three broadcasts serialized (profiled: three ~1.1 s
+        # jobs back-to-back at bench scale); candidate ids depend
+        # only on the (cached/checkpointed) pair table, letting the
+        # norm broadcast build in parallel with scored. Byte bound
+        # unchanged in the worst case (the residue can BE the whole
+        # candidate set); on the medium plan participant norms are
+        # ~1/4 of the shingle broadcast the byte gate already
+        # priced. The large plan keeps residue-derived ids — at
+        # scale the superset would broadcast norms for millions of
+        # participants whose pairs never reach the ladder.
+        if ids_cached is not None:
+            ids_sub = F.broadcast(ids_cached)
         else:
             ids_sub = F.broadcast(
-                needs_substring.select(
+                candidates.select(
                     F.explode(F.array("a", "b")).alias("conv_id")
                 ).distinct()
             )
-        # persisted: the norm_a and norm_b joins both consume d, and
-        # physical planning duplicates the subtree (the two filtered
-        # exchanges don't canonicalize equal under the broadcast semi),
-        # which re-scans docs and writes the exchange twice. The cache
-        # is small by the same residue-size argument; released with the
-        # scored cache via release_scored.
-        d = docs_norm.select("conv_id", "norm").join(
-            ids_sub, "conv_id", "left_semi"
-        )
-        if not (small or broadcast_sigs):
-            # large plan only: spread the residue norms for the
-            # exchange-based joins below; on the small/medium plans d is
-            # broadcast and the extra exchange is pure fixed cost
-            d = d.repartition(n_part, "conv_id")
-        d = d.persist()
-        # On the small/medium plans the corpus itself fits a broadcast,
-        # so the residue norms certainly do: broadcasting d turns the
-        # two norm joins into BHJs with zero exchanges/sorts over the
-        # residue (several fixed stages saved per run at query scale).
-        # The large plan keeps the exchange shape — there the residue
-        # norm BYTES (full doc texts) may exceed broadcast limits even
-        # when the pair count is modest.
-        d_side = F.broadcast(d) if (small or broadcast_sigs) else d
-        with_norms = (
-            needs_substring.join(
-                d_side.select(F.col("conv_id").alias("a"), "norm"), "a"
-            )
-            .withColumnRenamed("norm", "norm_a")
-            .join(d_side.select(F.col("conv_id").alias("b"), "norm"), "b")
-            .withColumnRenamed("norm", "norm_b")
-        )
-        if not (small or broadcast_sigs):
-            # EXPLICIT spread before the LCS UDF — LARGE plan: the
-            # residue is small relative to the corpus, so AQE coalesces
-            # the join output to 1-2 partitions and the per-pair
-            # rolling-hash kernel runs as a SERIAL tail — a fixed cost
-            # that hits every cluster size equally and caps scaling
-            # efficiency (measured: ~20s of the 1->4 executor fixed
-            # cost at 10M turns). An explicit count is
-            # AQE-coalescing-exempt. On the small/medium (broadcast)
-            # plans the UDF runs over the partitions the joins inherit,
-            # except for the smallest candidate sets: one task there.
-            with_norms = with_norms.repartition(n_part, "a", "b")
-        elif small and n_candidates <= _LADDER_ONE_TASK_MAX:
-            with_norms = with_norms.repartition(1, "a", "b")
-        with_norms = (
-            with_norms
-            .withColumn(
-                "contained",
-                F.when(
-                    F.length("norm_a") <= F.length("norm_b"),
-                    F.instr(F.col("norm_b"), F.col("norm_a")) > 0,
-                ).otherwise(F.instr(F.col("norm_a"), F.col("norm_b")) > 0),
-            )
-            # overlap decision only where containment already failed;
-            # byte-length pre-filter: LCS >= min_overlap needs both docs
-            # that long (native, prunes the UDF input further)
-            .withColumn(
-                "overlap",
-                F.when(F.col("contained"), F.lit(False)).otherwise(
-                    (F.length("norm_a") >= cfg.substring.min_overlap)
-                    & (F.length("norm_b") >= cfg.substring.min_overlap)
-                    & _overlap_udf(
-                        F.col("norm_a"),
-                        F.col("norm_b"),
-                        cfg.substring.min_overlap,
-                    )
-                ),
-            )
-            .select("a", "b", "sources", "jaccard", "contained", "overlap")
-            # persisted: the ladder branch (joins + the per-pair LCS
-            # kernel) is consumed by every downstream action on the
-            # verified union — without a cache each count/write re-runs
-            # it. The table is residue-sized (same smallness argument
-            # as d); released via release_scored.
-            .persist()
-        )
-        verified = no_ladder.unionByName(with_norms)
     else:
-        d = None
-        with_norms = None
-        verified = no_ladder
+        ids_sub = F.broadcast(
+            needs_substring.select(
+                F.explode(F.array("a", "b")).alias("conv_id")
+            ).distinct()
+        )
+    # persisted: the norm_a and norm_b joins both consume d, and
+    # physical planning duplicates the subtree (the two filtered
+    # exchanges don't canonicalize equal under the broadcast semi),
+    # which re-scans docs and writes the exchange twice. The cache
+    # is small by the same residue-size argument; released with the
+    # scored cache via release_scored.
+    d = docs_norm.select("conv_id", "norm").join(
+        ids_sub, "conv_id", "left_semi"
+    )
+    if not (small or broadcast_sigs):
+        # large plan only: spread the residue norms for the
+        # exchange-based joins below; on the small/medium plans d is
+        # broadcast and the extra exchange is pure fixed cost
+        d = d.repartition(n_part, "conv_id")
+    d = d.persist()
+    # On the small/medium plans the corpus itself fits a broadcast,
+    # so the residue norms certainly do: broadcasting d turns the
+    # two norm joins into BHJs with zero exchanges/sorts over the
+    # residue (several fixed stages saved per run at query scale).
+    # The large plan keeps the exchange shape — there the residue
+    # norm BYTES (full doc texts) may exceed broadcast limits even
+    # when the pair count is modest.
+    d_side = F.broadcast(d) if (small or broadcast_sigs) else d
+    with_norms = (
+        needs_substring.join(
+            d_side.select(F.col("conv_id").alias("a"), "norm"), "a"
+        )
+        .withColumnRenamed("norm", "norm_a")
+        .join(d_side.select(F.col("conv_id").alias("b"), "norm"), "b")
+        .withColumnRenamed("norm", "norm_b")
+    )
+    if not (small or broadcast_sigs):
+        # EXPLICIT spread before the LCS UDF — LARGE plan: the
+        # residue is small relative to the corpus, so AQE coalesces
+        # the join output to 1-2 partitions and the per-pair
+        # rolling-hash kernel runs as a SERIAL tail — a fixed cost
+        # that hits every cluster size equally and caps scaling
+        # efficiency (measured: ~20s of the 1->4 executor fixed
+        # cost at 10M turns). An explicit count is
+        # AQE-coalescing-exempt. On the small/medium (broadcast)
+        # plans the UDF runs over the partitions the joins inherit,
+        # except for the smallest candidate sets: one task there.
+        with_norms = with_norms.repartition(n_part, "a", "b")
+    elif small and n_candidates <= _LADDER_ONE_TASK_MAX:
+        with_norms = with_norms.repartition(1, "a", "b")
+    with_norms = (
+        with_norms
+        .withColumn(
+            "contained",
+            F.when(
+                F.length("norm_a") <= F.length("norm_b"),
+                F.instr(F.col("norm_b"), F.col("norm_a")) > 0,
+            ).otherwise(F.instr(F.col("norm_a"), F.col("norm_b")) > 0),
+        )
+        # overlap decision only where containment already failed;
+        # byte-length pre-filter: LCS >= min_overlap needs both docs
+        # that long (native, prunes the UDF input further)
+        .withColumn(
+            "overlap",
+            F.when(F.col("contained"), F.lit(False)).otherwise(
+                (F.length("norm_a") >= cfg.substring.min_overlap)
+                & (F.length("norm_b") >= cfg.substring.min_overlap)
+                & _overlap_udf(
+                    F.col("norm_a"),
+                    F.col("norm_b"),
+                    cfg.substring.min_overlap,
+                )
+            ),
+        )
+        .select("a", "b", "sources", "jaccard", "contained", "overlap")
+        # persisted: the ladder branch (joins + the per-pair LCS
+        # kernel) is consumed by every downstream action on the
+        # verified union — without a cache each count/write re-runs
+        # it. The table is residue-sized (same smallness argument
+        # as d); released via release_scored.
+        .persist()
+    )
+    verified = no_ladder.unionByName(with_norms)
 
     out = verified.withColumn(
         "is_dup",
@@ -465,8 +486,8 @@ def verify_pairs(
         | F.col("overlap"),
     )
     out._cdr_scored = scored
-    out._cdr_dnorm = d if cfg.use_substring else None
-    out._cdr_ladder = with_norms if cfg.use_substring else None
+    out._cdr_dnorm = d
+    out._cdr_ladder = with_norms
     out._cdr_ids = ids_cached
     return out
 

@@ -59,10 +59,7 @@ def brute_force_oracle(docs: DataFrame, cfg: DedupConfig) -> OracleResult:
 
     shingle_sets = {}
     for cid in ids:
-        if cfg.shingle.kind == "char":
-            sh = H.char_shingles(norms[cid], cfg.shingle.k, cfg.shingle.seed)
-        else:
-            sh = H.word_shingles(norms[cid], cfg.shingle.k, cfg.shingle.seed)
+        sh = H.char_shingles(norms[cid], cfg.shingle.k, cfg.shingle.seed)
         # same int32 truncation the pipeline stores/verifies with
         shingle_sets[cid] = frozenset(int(x) for x in stored_shingles(sh))
 
@@ -88,7 +85,7 @@ def brute_force_oracle(docs: DataFrame, cfg: DedupConfig) -> OracleResult:
             inter = len(sa & sb) if sa and sb else 0
             if inter and inter / (len(sa) + len(sb) - inter) >= cfg.jaccard_threshold:
                 dup = True
-            if not dup and cfg.use_substring:
+            if not dup:
                 short, long_ = (na, nb) if len(na) <= len(nb) else (nb, na)
                 if len(short) >= min_len and short in long_:
                     dup = True

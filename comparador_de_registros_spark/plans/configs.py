@@ -6,6 +6,13 @@ at (BASELINE.json: "matching the reference's cluster assignments
 oracle (brute-force exact Jaccard + transitive closure) and the LSH
 pipeline both consume the same :class:`DedupConfig`.
 
+The engine runs one configuration shape: utf-8 byte k-gram shingles,
+one-permutation MinHash, LSH bands plus winnowed substring anchors, and
+the substring ladder in verify. The settable fields below are sizes,
+thresholds, seeds and the id encoding; the verify-plan and CC
+fast-path split points are constants next to the code that reads them
+(operators/verify.py, operators/cluster.py).
+
 Default LSH geometry: 128 permutations as 32 bands x 4 rows. The S-curve
 gives pair-catch probability 1-(1-J^4)^32 — at the default Jaccard
 threshold 0.8 a true dup pair is missed with p ~ 5e-8, comfortably
@@ -22,11 +29,9 @@ from typing import ClassVar
 
 @dataclass(frozen=True)
 class ShingleConfig:
-    """Document -> shingle-set config. ``kind='char'`` hashes utf-8 byte
-    k-grams of the normalized text (robust to token-level edits);
-    ``kind='word'`` hashes k-token windows."""
+    """Document -> shingle-set config: hashed utf-8 byte k-grams of the
+    normalized text (robust to token-level edits)."""
 
-    kind: str = "char"
     # 12-byte char grams: small enough that 1-2 token edits keep J >= 0.9
     # on real-length conversations, large enough that reordering turns
     # (boundary-crossing grams rewritten) lands clearly under the 0.8
@@ -35,29 +40,25 @@ class ShingleConfig:
     seed: int = 0x5EED_5EED
 
     def __post_init__(self) -> None:
-        if self.kind not in ("char", "word"):
-            raise ValueError(f"unknown shingle kind {self.kind!r}")
         if self.k < 1:
             raise ValueError("k must be >= 1")
 
 
 @dataclass(frozen=True)
 class MinHashConfig:
-    """``scheme='oph'`` (default) is one-permutation hashing with
-    circular densification (Li/Owen/Zhang 2012, Shrivastava/Li 2014):
-    one hash pass per shingle instead of num_perm — the signature stage
-    is ~num_perm x cheaper per byte with the same per-bucket collision
-    probability J. ``scheme='kperm'`` is classic Broder MinHash (min
-    over num_perm seeded mixes)."""
+    """One-permutation hashing with circular densification
+    (Li/Owen/Zhang 2012, Shrivastava/Li 2014): one hash pass per shingle
+    instead of num_perm — ~num_perm x cheaper per byte than classic
+    k-permutation MinHash with the same per-bucket collision
+    probability J."""
 
     num_perm: int = 128
-    seed: int = 0x00C0FFEE
-    scheme: str = "oph"
+    # OPH uses no per-permutation seeds; the constant stays for callers
+    # that still derive k-permutation seeds from it.
+    seed: ClassVar[int] = 0x00C0FFEE
 
     def __post_init__(self) -> None:
-        if self.scheme not in ("oph", "kperm"):
-            raise ValueError(f"unknown minhash scheme {self.scheme!r}")
-        if self.scheme == "oph" and self.num_perm & (self.num_perm - 1):
+        if self.num_perm & (self.num_perm - 1):
             raise ValueError("num_perm must be a power of two for OPH")
 
 
@@ -116,7 +117,10 @@ class DedupConfig:
     # the low-entropy benchmark corpus. The constant stays (always False)
     # so callers that branch on it keep working.
     use_simhash: ClassVar[bool] = False
-    use_substring: bool = True
+    # The substring anchors and the verify ladder always run (the only
+    # generator for partial-overlap dups); the constant stays for callers
+    # that branch on it.
+    use_substring: ClassVar[bool] = True
     # assemble-shuffle skew guard: cap turns per conversation (first
     # max_turns in turn_idx order; truncations are flagged + counted in
     # the stage metrics, never silent). 10k turns * ~120 B/turn keeps
@@ -131,50 +135,6 @@ class DedupConfig:
     # re-canonicalized to min-conv_id labels, so the output table is
     # bit-identical to the unencoded path (parity-tested).
     encode_ids: bool = False
-    # Verify-stage participant filter: the candidate-pair id set is
-    # broadcast into a semi-join that prunes the signature table BEFORE
-    # its single shared exchange, so only conversations that appear in
-    # >= 1 pair ship their shingle arrays (measured: 27% byte cut at
-    # 150k base, and the filter must be STATIC — AQE's broadcast
-    # conversion arrives after the exchange is already submitted).
-    # Flip off when the distinct participant count outgrows what the
-    # driver can broadcast (~100M int64 ids); the fallback keeps the
-    # same single-exchange structure, just filtered post-shuffle.
-    broadcast_participants: bool = True
-
-    # verify-stage plan split point: when the caller KNOWS the candidate
-    # pair count (e.g. signature_dup_pairs materializes its candidate
-    # cache) and it is at most this, verify joins broadcast the pair
-    # side directly into the cached signature table — zero sig-table
-    # exchanges, the optimal small-corpus plan. Above it (or when the
-    # count is unknown, as in the checkpointing pipeline) verify uses
-    # the shared participant-filtered sig exchange, the optimal
-    # large-corpus plan (round-4 verdict: verify shuffle bytes). Only
-    # the slim (a, b, sources) pair table is ever broadcast (~50 B/row
-    # -> ~10 MB at the threshold); the fat shingle arrays stay
-    # partitioned.
-    verify_small_candidates_max: int = 200_000
-
-    # verify-stage MEDIUM plan: when the pair count is known but above
-    # verify_small_candidates_max, verify counts the distinct
-    # participants (one job over the caller's cached pair table); if at
-    # most this many, the participant-filtered sig table is BROADCAST
-    # into both shingle joins instead of exchanged — the pair side then
-    # never shuffles at all. Byte budget: 200k participants * ~1.1 KB
-    # avg sig row ≈ 220 MB broadcast, inside the 8 GB/512M-row broadcast
-    # cap and comfortable for an 8 GB driver; above it the large
-    # shared-exchange plan (the 100 TB shape) applies. Measured at 50k
-    # docs / 2.76M candidates (sf1.0 bench): scored stage 15.3s
-    # (shared exchange) -> 12.4s (broadcast sigs), and no sort of the
-    # fat pair rows.
-    verify_broadcast_sigs_max: int = 200_000
-
-    # byte companion to the count gate above: estimated broadcast size
-    # (participants * (avg_shingles * 4 B + row overhead) * 2) must stay
-    # under this, pricing FAT sig rows (assembled conversations carry
-    # 10x a short doc's shingles) out of the broadcast plan that a pure
-    # count cap would admit.
-    verify_broadcast_sigs_max_bytes: int = 256 * 1024 * 1024
 
     def __post_init__(self) -> None:
         if self.minhash is None:

@@ -5,9 +5,11 @@
   ``left_anti`` against done partitions).
 * :func:`incremental_candidates` — delta dedup: newly arrived
   conversations are signed and banded, then joined against the FULL
-  corpus's band table (new x all instead of all x all) — the shuffle is
-  proportional to the delta, not the corpus. This is how a 10^12-turn
-  table absorbs daily increments without re-running the self-join.
+  corpus's band table (new x all instead of all x all), so no
+  corpus-vs-corpus pair is enumerated again. The shuffle is NOT
+  proportional to the delta: building the corpus band table runs
+  ``corpus.unionByName(new).distinct()`` over the whole signature
+  table, shingle arrays included, on every call.
 """
 
 from __future__ import annotations
@@ -40,7 +42,8 @@ def incremental_candidates(
 ) -> DataFrame:
     """Candidate pairs between NEW conversations and the whole corpus
     (including new-vs-new), without re-enumerating corpus-vs-corpus.
-    -> (a, b, source='lsh_incr') with a < b."""
+    -> (a, b, sources=['lsh_incr']) with a < b, one row per pair — the
+    candidate contract :func:`verify_pairs` consumes."""
     new_keyed = _band_table(new_signatures, cfg)
     all_keyed = _band_table(
         corpus_signatures.unionByName(new_signatures).distinct(), cfg
@@ -54,5 +57,5 @@ def incremental_candidates(
             F.greatest("n.conv_id", "c.conv_id").alias("b"),
         )
         .distinct()
-        .withColumn("source", F.lit("lsh_incr"))
+        .withColumn("sources", F.array(F.lit("lsh_incr")))
     )

@@ -13,8 +13,9 @@ operators).
 * :class:`StreamingDedup` — ``foreachBatch`` incremental dedup: each
   micro-batch of closed conversations is signed (the same vectorized
   kernel), banded against the ACCUMULATED signature store
-  (delta x corpus join, shuffle proportional to the batch —
-  streaming/incremental.py), verified (Jaccard / containment / LCS),
+  (delta x corpus join — streaming/incremental.py; the band table is
+  rebuilt from the full store each batch, so the shuffle grows with the
+  corpus, not only the batch), verified (Jaccard / containment / LCS),
   and appended to the verified-pairs and signature tables. State lives
   in parquet tables + the streaming checkpoint, so the query restarts
   exactly-once per batch id.
@@ -37,7 +38,6 @@ from comparador_de_registros_spark.operators.signatures import (
 )
 from comparador_de_registros_spark.operators.verify import (
     release_scored,
-    union_candidates,
     verify_pairs,
 )
 from comparador_de_registros_spark.plans.configs import DedupConfig
@@ -168,9 +168,7 @@ class StreamingDedup:
             corpus_sigs = self._read_state(
                 spark, "signatures", SIGNATURE_SCHEMA, batch_id
             )
-            cand = union_candidates(
-                incremental_candidates(sigs_new, corpus_sigs, self.cfg.lsh)
-            )
+            cand = incremental_candidates(sigs_new, corpus_sigs, self.cfg.lsh)
             all_sigs = corpus_sigs.unionByName(sigs_new)
             all_norms = self._read_state(
                 spark, "docs_norm", DOCS_NORM_SCHEMA, batch_id

@@ -4,7 +4,8 @@ them, plus the sign stage's narrowness-probe fallback.
 The generators are MinHash-LSH bands and winnowed substring anchors;
 SimHash blocking was removed (plans/configs.py explains why), so no
 candidate may carry a ``simhash`` source and the retired slot of
-``unified_candidates`` rejects a config.
+``unified_candidates`` rejects a config; the anchor generator always
+runs, so its retired on/off slot rejects False.
 """
 
 from __future__ import annotations
@@ -68,6 +69,14 @@ def test_unified_candidates_rejects_simhash_config(spark):
     )
     with pytest.raises(ValueError, match="SimHash"):
         lsh_ops.unified_candidates(sigs, DedupConfig().lsh, object(), True)
+
+
+def test_unified_candidates_rejects_substring_off(spark):
+    sigs = spark.createDataFrame(
+        [], "conv_id string, minhash array<int>, anchors array<bigint>"
+    )
+    with pytest.raises(ValueError, match="substring"):
+        lsh_ops.unified_candidates(sigs, DedupConfig().lsh, None, False)
 
 
 class _FailingJsc:

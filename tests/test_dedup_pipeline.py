@@ -342,7 +342,7 @@ def test_lsh_candidates_near_linear(spark, pipeline_result):
 
 def test_batch_kernel_matches_per_doc():
     """The vectorized cross-document kernel must be bit-for-bit equal to
-    the per-doc primitives (char_shingles / minhash_signature /
+    the per-doc primitives (char_shingles / oph_signature /
     winnow + stored_shingles) on every edge case: empty doc, doc shorter
     than k, shorter than the substring gram, shorter than min_doc_len,
     multi-byte UTF-8, and normal-length docs."""
@@ -353,8 +353,6 @@ def test_batch_kernel_matches_per_doc():
         batch_signatures,
         stored_shingles,
     )
-
-    from comparador_de_registros_spark.plans.configs import MinHashConfig
 
     rng = np.random.default_rng(123)
     words = ["consulta", "paciente", "ação", "exame", "b", "retorno", "José"]
@@ -368,39 +366,35 @@ def test_batch_kernel_matches_per_doc():
         ("x" * 95),  # just under min_doc_len
         ("y" * 96),  # exactly min_doc_len
     ]
-    for scheme in ("oph", "kperm"):
-        cfg = DedupConfig(minhash=MinHashConfig(scheme=scheme))
-        seeds = H.make_seeds(cfg.minhash.num_perm, cfg.minhash.seed)
-        got = batch_signatures(texts, cfg, seeds)
+    cfg = DedupConfig()
+    got = batch_signatures(texts, cfg)
 
-        for i, text in enumerate(texts):
-            sh = H.char_shingles(text, cfg.shingle.k, cfg.shingle.seed)
-            assert got["n_shingles"][i] == len(sh), f"doc {i} n_shingles"
-            np.testing.assert_array_equal(
-                np.asarray(got["shingles"][i]),
-                stored_shingles(sh),
-                f"doc {i} shingles",
+    for i, text in enumerate(texts):
+        sh = H.char_shingles(text, cfg.shingle.k, cfg.shingle.seed)
+        assert got["n_shingles"][i] == len(sh), f"doc {i} n_shingles"
+        np.testing.assert_array_equal(
+            np.asarray(got["shingles"][i]),
+            stored_shingles(sh),
+            f"doc {i} shingles",
+        )
+        np.testing.assert_array_equal(
+            np.asarray(got["minhash"][i]),
+            H.oph_signature(sh, cfg.minhash.num_perm),
+            f"doc {i} minhash",
+        )
+        if len(text.encode()) >= cfg.substring.min_doc_len:
+            grams = H.rolling_kgram_hashes(
+                text.encode("utf-8"), cfg.substring.gram, cfg.substring.seed
             )
-            expect_mh = (
-                H.oph_signature(sh, cfg.minhash.num_perm)
-                if scheme == "oph"
-                else H.minhash_signature(sh, seeds)
+            expect_anchors = H.winnow(grams, cfg.substring.window).astype(
+                np.int64
             )
-            np.testing.assert_array_equal(
-                np.asarray(got["minhash"][i]), expect_mh, f"doc {i} {scheme} minhash"
-            )
-            if len(text.encode()) >= cfg.substring.min_doc_len:
-                grams = H.rolling_kgram_hashes(
-                    text.encode("utf-8"), cfg.substring.gram, cfg.substring.seed
-                )
-                expect_anchors = H.winnow(grams, cfg.substring.window).astype(
-                    np.int64
-                )
-            else:
-                expect_anchors = np.empty(0, dtype=np.int64)
-            np.testing.assert_array_equal(
-                np.asarray(got["anchors"][i]), expect_anchors, f"doc {i} anchors"
-            )
+        else:
+            expect_anchors = np.empty(0, dtype=np.int64)
+        np.testing.assert_array_equal(
+            np.asarray(got["anchors"][i]), expect_anchors, f"doc {i} anchors"
+        )
+
 
 def test_partial_overlap_dups_caught_via_lcs(spark, pipeline_result):
     """The planted partial-overlap class: a long contiguous block shared

@@ -46,24 +46,21 @@ def _sigs_cand_docs(spark):
     return sigs, cand, docs
 
 
-def test_verify_medium_plan_broadcasts_sigs_and_matches_large(spark):
+def test_verify_medium_plan_broadcasts_sigs_and_matches_large(spark, monkeypatch):
     """With the pair count known and the participant set inside the
     broadcast gates, verify must take the broadcast-sig plan (no
     SortMergeJoin anywhere, sig side broadcast) and produce exactly the
     large plan's rows."""
-    import dataclasses
+    from comparador_de_registros_spark.operators import verify
 
     sigs, cand, docs = _sigs_cand_docs(spark)
-    cfg_med = dataclasses.replace(
-        DedupConfig(), verify_small_candidates_max=0
-    )  # force past the small plan; medium gates pass (2 rows, tiny)
-    cfg_large = dataclasses.replace(
-        DedupConfig(),
-        verify_small_candidates_max=0,
-        verify_broadcast_sigs_max=0,  # force the shared-exchange plan
-    )
-    out_med = verify_pairs(cand, sigs, docs, cfg_med, n_candidates=2)
-    out_large = verify_pairs(cand, sigs, docs, cfg_large, n_candidates=2)
+    cfg = DedupConfig()
+    # force past the small plan; medium gates pass (2 rows, tiny)
+    monkeypatch.setattr(verify, "_SMALL_CANDIDATES_MAX", 0)
+    out_med = verify_pairs(cand, sigs, docs, cfg, n_candidates=2)
+    # force the shared-exchange plan
+    monkeypatch.setattr(verify, "_BROADCAST_SIGS_MAX", 0)
+    out_large = verify_pairs(cand, sigs, docs, cfg, n_candidates=2)
     try:
         plan = out_med._jdf.queryExecution().executedPlan().toString()
         rows_med = sorted(

@@ -1,5 +1,5 @@
 """Tests for the training-data operators: text analysis, document
-dedup, similarity search, multimodal plumbing, incremental dedup."""
+dedup, similarity search, incremental dedup."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from comparador_de_registros_spark.operators import doc_dedup, multimodal, textstats
+from comparador_de_registros_spark.operators import doc_dedup, textstats
 from comparador_de_registros_spark.operators.similarity import (
     cosine_topk,
     srp_candidate_pairs,
@@ -203,28 +203,6 @@ def test_srp_bucket_cap_drops_oversized(spark):
     assert d and all(r["sz"] == 30 for r in d)
 
 
-def test_multimodal_plumbing(spark):
-    assets = multimodal.generate_fake_assets(spark, n=30)
-    assert assets.count() == 30
-    feats = multimodal.extract_features(assets, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r["feature"]) == multimodal.FEATURE_DIM for r in rows)
-    # determinism
-    again = {r["asset_id"]: r["payload_hash"] for r in
-             multimodal.extract_features(assets, fake=True).collect()}
-    assert {r["asset_id"]: r["payload_hash"] for r in rows} == again
-    frames = multimodal.sample_video_frames(assets, every_ms=500)
-    assert frames.count() > 0
-    assert frames.groupBy("asset_id").count().agg(F.min("count")).collect()[0][0] >= 1
-
-
-def test_multimodal_real_mode_raises(spark):
-    assets = multimodal.generate_fake_assets(spark, n=3)
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        multimodal.extract_features(assets, fake=False).collect()
-
-
 def test_anti_join_resume(spark):
     todo = spark.createDataFrame([(1, 2), (3, 4), (5, 6)], ["a", "b"])
     done = spark.createDataFrame([(1, 2)], ["a", "b"])
@@ -244,6 +222,9 @@ def test_incremental_candidates(spark, docs):
     assert any((r["a"], r["b"]) == ("1", "5") for r in cand)
     # delta join never emits corpus-vs-corpus pairs
     assert all("5" in (r["a"], r["b"]) for r in cand)
+    # one row per pair in verify_pairs' (a, b, sources) contract
+    assert all(r["sources"] == ["lsh_incr"] for r in cand)
+    assert len({(r["a"], r["b"]) for r in cand}) == len(cand)
 
 
 def test_ivf_persisted_index_no_retrain_and_prunes(spark, tmp_path, monkeypatch):
@@ -286,152 +267,3 @@ def test_ivf_persisted_index_no_retrain_and_prunes(spark, tmp_path, monkeypatch)
     ]
     assert scan and "PartitionFilters" in scan[0]
     assert "cell IN" in scan[0] or "cell#" in scan[0].split("PartitionFilters")[1].split("]")[0]
-
-
-def test_multimodal_real_wav_decode(spark):
-    """fake=False is a REAL decode path where the codec exists: PCM WAV
-    via stdlib wave. A genuine 16-bit WAV payload round-trips through
-    extract_features and yields the signal's bucketed-mean profile."""
-    import io
-    import wave
-
-    import numpy as np
-
-    def wav_bytes(freq: float) -> bytes:
-        t = np.arange(800) / 8000.0
-        pcm = (np.sin(2 * np.pi * freq * t) * 20000).astype("<i2")
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(8000)
-            w.writeframes(pcm.tobytes())
-        return buf.getvalue()
-
-    rows = [(i, "audio", wav_bytes(100.0 * (i + 1)), None, None, 100, "wav")
-            for i in range(4)]
-    assets = spark.createDataFrame(rows, multimodal.ASSET_SCHEMA)
-    feats = {r["asset_id"]: r["feature"]
-             for r in multimodal.extract_features(assets, fake=False).collect()}
-    assert len(feats) == 4
-    # a pure sine's bucketed means are small relative to its amplitude
-    assert all(max(abs(x) for x in f) < 0.7 for f in feats.values())
-    # and the decode is deterministic
-    feats2 = {r["asset_id"]: r["feature"]
-              for r in multimodal.extract_features(assets, fake=False).collect()}
-    assert feats == feats2
-
-
-def _png_filter_line(ftype, cur, prev, bpp=1):
-    """Forward PNG scanline filter per the spec — an INDEPENDENT
-    implementation the decoder's reconstruction is tested against."""
-    cur = cur.astype(int)
-    prev = prev.astype(int)
-    out = np.zeros_like(cur)
-    for i in range(len(cur)):
-        a = cur[i - bpp] if i >= bpp else 0
-        b = prev[i]
-        c = prev[i - bpp] if i >= bpp else 0
-        if ftype == 0:
-            pred = 0
-        elif ftype == 1:
-            pred = a
-        elif ftype == 2:
-            pred = b
-        elif ftype == 3:
-            pred = (a + b) // 2
-        else:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-        out[i] = (cur[i] - pred) % 256
-    return out.astype(np.uint8)
-
-
-def test_png_stdlib_roundtrip():
-    """encode_png_gray -> _decode_png_stdlib is identity on 8-bit
-    grayscale (no imaging library involved)."""
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(11, 13), dtype=np.uint8)
-    assert np.array_equal(
-        multimodal._decode_png_stdlib(multimodal.encode_png_gray(img)), img
-    )
-
-
-def test_png_stdlib_all_filters():
-    """The decoder reconstructs every scanline filter type (None, Sub,
-    Up, Average, Paeth), validated against an independent forward
-    filter implementation."""
-    import struct
-    import zlib
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, size=(5, 9), dtype=np.uint8)
-    prev = np.zeros(9, dtype=np.uint8)
-    raw = b""
-    for y, ftype in enumerate([0, 1, 2, 3, 4]):
-        raw += bytes([ftype]) + _png_filter_line(ftype, img[y], prev).tobytes()
-        prev = img[y]
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 9, 5, 8, 0, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    assert np.array_equal(multimodal._decode_png_stdlib(png), img)
-
-
-def test_png_stdlib_rgb_luma():
-    """Color type 2 (RGB) decodes through the ITU-R 601 integer luma —
-    the same formula Pillow's convert(\"L\") uses."""
-    import struct
-    import zlib
-
-    rgb = np.array(
-        [[[255, 0, 0], [0, 255, 0], [0, 0, 255], [10, 200, 30]]],
-        dtype=np.uint8,
-    )
-    raw = b"\x00" + rgb.tobytes()
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 1, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    px = rgb.astype(int)
-    expected = (
-        (px[..., 0] * 299 + px[..., 1] * 587 + px[..., 2] * 114) // 1000
-    ).astype(np.uint8)
-    assert np.array_equal(multimodal._decode_png_stdlib(png), expected)
-
-
-def test_multimodal_real_image_decode(spark):
-    """fake=False image decode runs HERE, with no imaging wheels: the
-    stdlib PNG path (Pillow, when installed, yields identical output
-    by construction). The feature equals the bucketed-mean profile of
-    the actual decoded pixels."""
-    img = (np.arange(64, dtype=np.uint8).reshape(8, 8) * 3) % 256
-    png = multimodal.encode_png_gray(img)
-    rows = [(0, "image", png, 8, 8, None, "png")]
-    assets = spark.createDataFrame(rows, multimodal.ASSET_SCHEMA)
-    out = multimodal.extract_features(assets, fake=False).collect()
-    assert len(out) == 1 and len(out[0]["feature"]) == multimodal.FEATURE_DIM
-    signal = (img.astype(np.float32).ravel() - 127.5) / 127.5
-    expected = [
-        float(b.mean()) for b in np.array_split(signal, multimodal.FEATURE_DIM)
-    ]
-    assert np.allclose(out[0]["feature"], expected, atol=1e-6)
