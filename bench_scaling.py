@@ -48,8 +48,7 @@ from comparador_de_registros_spark.plans.configs import DedupConfig
 from comparador_de_registros_spark.sources.catalog import ParquetCatalog
 
 turns_path, workdir, tag = sys.argv[1], sys.argv[2], sys.argv[3]
-encode_ids = len(sys.argv) > 4 and sys.argv[4] == "1"
-cfg = DedupConfig(encode_ids=encode_ids)
+cfg = DedupConfig()
 spark = SparkSession.builder.appName(f"cdr-scale-{tag}").getOrCreate()
 stage_win = {}
 turns = spark.read.parquet(turns_path)
@@ -130,7 +129,6 @@ def run_at(
     turns_path: str,
     mem_gb: int,
     exec_cores: int,
-    encode_ids: bool = False,
 ) -> dict:
     """One cold cluster + cold app at ``n_exec`` executors of
     ``exec_cores`` pinned cores each."""
@@ -166,7 +164,6 @@ def run_at(
             "--conf", "spark.sql.session.timeZone=UTC",
             "--conf", "spark.ui.enabled=false",
             runner, turns_path, workdir, str(n_exec),
-            "1" if encode_ids else "0",
         ]
         # opt-in profiling: per-task event logs for idle/straggler
         # analysis (tools/analyze_eventlog.py); off for gate runs
@@ -204,11 +201,6 @@ def main() -> None:
         "and the conservative best-vs-best pairing are both reported",
     )
     ap.add_argument("--mem-gb", type=int, default=6)
-    ap.add_argument(
-        "--encode-ids", action="store_true",
-        help="run the pipeline with cfg.encode_ids=True (int64 id "
-        "dictionary for candidates/verify/cluster)",
-    )
     ap.add_argument(
         "--tag", default="",
         help="write the report to BENCH/BASELINE_{tag}.md instead of "
@@ -253,10 +245,7 @@ def main() -> None:
             if c not in (lo, hi):
                 schedule.append(c)
     for n_exec in schedule:
-        r = run_at(
-            n_exec, turns_path, args.mem_gb, args.exec_cores,
-            encode_ids=args.encode_ids,
-        )
+        r = run_at(n_exec, turns_path, args.mem_gb, args.exec_cores)
         print(json.dumps(r), flush=True)
         attempts.setdefault(n_exec, []).append(r)
 
@@ -309,8 +298,7 @@ def main() -> None:
 Protocol: the full dedup pipeline (assemble -> exact -> sign ->
 candidates -> verify -> cluster; DedupConfig defaults: char-12
 shingles, 128-bucket OPH MinHash as 32x4 LSH bands,
-winnowed substring anchors + suffix-array LCS verify, Jaccard >= 0.8;
-encode_ids={args.encode_ids})
+winnowed substring anchors + suffix-array LCS verify, Jaccard >= 0.8)
 submitted with ``spark-submit --py-files`` to a REAL local standalone
 cluster — one master + K worker daemons of {args.exec_cores} core(s) each, every
 worker JVM (and its executor + Python workers) ``taskset``-pinned to

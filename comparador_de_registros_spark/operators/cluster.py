@@ -15,8 +15,8 @@ Scale notes:
   SURVEY.md §4 item 3);
 * convergence check = count + checksum of the edge set, observed
   DURING the round's checkpoint job (zero extra actions per round);
-* node ids are conv_id strings under lexicographic order; a dictionary
-  encoding to longs is a further optimization at 10^12 scale.
+* node ids are any orderable column type: the pipeline passes conv_id
+  strings (lexicographic order), the tests also pass longs.
 """
 
 from __future__ import annotations

@@ -65,20 +65,6 @@ def exact_dup_clusters(
     )
 
 
-def exact_dup_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Exact-duplicate pairs (a < b) via hash self-join."""
-    hashed = docs.select(
-        F.col(id_col).alias("a"),
-        F.md5(normalize_doc_col(F.col(text_col))).alias("doc_hash"),
-    )
-    other = hashed.select(F.col("a").alias("b"), "doc_hash")
-    return (
-        hashed.join(other, "doc_hash")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-
-
 def distinct_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, token) with distinct lowercased whitespace tokens."""
     return (

@@ -65,7 +65,6 @@ T_VERIFIED = "verified"
 T_CLUSTERS = "clusters"
 T_METRICS = "metrics"
 T_LINEAGE = "lineage"
-T_IDMAP = "id_map"
 
 
 def _count_if(cond: Column) -> Column:
@@ -237,45 +236,9 @@ class DedupPipeline:
             },
         )
 
-    # --- int64 id dictionary (cfg.encode_ids) ---------------------------
-
-    def _write_id_map(self, spark: SparkSession) -> None:
-        """Per-run dictionary conv_id(string) -> id(int64), covering
-        every doc. Ids are unique by construction
-        (``monotonically_increasing_id`` = partition id << 33 | local
-        counter) and become DETERMINISTIC the moment the table is
-        written: every later stage joins this one checkpoint, and the
-        cluster output is re-canonicalized to min-conv_id string labels
-        so nothing downstream depends on the particular id values."""
-        docs = self.catalog.read(spark, T_DOCS)
-        id_map = docs.select("conv_id").withColumn(
-            "id", F.monotonically_increasing_id()
-        )
-        self.catalog.write(id_map, T_IDMAP)
-
-    def _id_map(self, spark: SparkSession) -> DataFrame:
-        return self.catalog.read(spark, T_IDMAP)
-
-    @staticmethod
-    def _encode_col(df: DataFrame, id_map: DataFrame, col: str) -> DataFrame:
-        """Replace string id column ``col`` with its int64 encoding."""
-        m = id_map.select(
-            F.col("conv_id").alias(col), F.col("id").alias(f"__{col}_enc")
-        )
-        return (
-            df.join(m, col)
-            .drop(col)
-            .withColumnRenamed(f"__{col}_enc", col)
-        )
-
     def stage_sign(self, spark: SparkSession) -> None:
         docs = self.catalog.read(spark, T_DOCS)
         exact_map = self.catalog.read(spark, T_EXACT)
-        if self.cfg.encode_ids:
-            # written BEFORE signatures: the signatures _SUCCESS marker
-            # is the sign stage's resume point, so its presence implies
-            # the id dictionary exists too
-            self._write_id_map(spark)
         reps = docs.join(
             exact_map.where(F.col("conv_id") == F.col("rep_id")).select("rep_id"),
             docs["conv_id"] == F.col("rep_id"),
@@ -315,8 +278,6 @@ class DedupPipeline:
 
     def stage_candidates(self, spark: SparkSession) -> None:
         sigs = self.catalog.read(spark, T_SIGN)
-        if self.cfg.encode_ids:
-            sigs = self._encode_col(sigs, self._id_map(spark), "conv_id")
         cand, dropped, buckets = lsh_ops.unified_candidates(sigs, self.cfg.lsh)
         # the candidates and dropped-buckets writes are two actions over
         # the same grouped bucket table; persist it so the big
@@ -369,12 +330,6 @@ class DedupPipeline:
         cand = self.catalog.read(spark, T_CAND)
         sigs = self.catalog.read(spark, T_SIGN)
         docs = self.catalog.read(spark, T_DOCS)
-        if self.cfg.encode_ids:
-            id_map = self._id_map(spark)
-            sigs = self._encode_col(sigs, id_map, "conv_id")
-            docs = self._encode_col(
-                docs.select("conv_id", "norm"), id_map, "conv_id"
-            )
         # the candidate-pair count is free from the checkpoint's parquet
         # footers (lineage metadata, no scan) and unlocks verify's
         # small/medium plans — at bench scale the large shared-exchange
@@ -415,15 +370,6 @@ class DedupPipeline:
             F.col("conv_id").alias("a"), F.col("rep_id").alias("b")
         )
         doc_ids = docs.select("conv_id")
-        id_map = None
-        if self.cfg.encode_ids:
-            # member edges + singleton universe to int64; dup_edges are
-            # already encoded (the candidates stage emitted long ids)
-            id_map = self._id_map(spark)
-            member_edges = self._encode_col(
-                self._encode_col(member_edges, id_map, "a"), id_map, "b"
-            )
-            doc_ids = self._encode_col(doc_ids, id_map, "conv_id")
         edges = dup_edges.unionByName(member_edges)
         comp = connected_components(edges)
         clusters = (
@@ -434,22 +380,6 @@ class DedupPipeline:
                 F.coalesce("cluster_id", F.col("conv_id")).alias("cluster_id"),
             )
         )
-        if self.cfg.encode_ids:
-            # decode + re-canonicalize: label every cluster with its
-            # MINIMUM conv_id STRING, making the output bit-identical to
-            # the unencoded path (and independent of the run-specific id
-            # dictionary). Two small shuffles over the slim clusters
-            # table only.
-            named = clusters.join(
-                id_map.select("id", F.col("conv_id").alias("__s")),
-                clusters["conv_id"] == F.col("id"),
-            ).select(F.col("__s").alias("conv_id"), "cluster_id")
-            labels = named.groupBy("cluster_id").agg(
-                F.min("conv_id").alias("__label")
-            )
-            clusters = named.join(labels, "cluster_id").select(
-                "conv_id", F.col("__label").alias("cluster_id")
-            )
         self._write_observed(
             spark,
             clusters,

@@ -9,9 +9,10 @@ pipeline both consume the same :class:`DedupConfig`.
 The engine runs one configuration shape: utf-8 byte k-gram shingles,
 one-permutation MinHash, LSH bands plus winnowed substring anchors, and
 the substring ladder in verify. The settable fields below are sizes,
-thresholds, seeds and the id encoding; the verify-plan and CC
-fast-path split points are constants next to the code that reads them
-(operators/verify.py, operators/cluster.py).
+thresholds and seeds; conversation ids stay ``conv_id`` strings from
+candidates to clusters. The verify-plan and CC fast-path split points
+are constants next to the code that reads them (operators/verify.py,
+operators/cluster.py).
 
 Default LSH geometry: 128 permutations as 32 bands x 4 rows. The S-curve
 gives pair-catch probability 1-(1-J^4)^32 — at the default Jaccard
@@ -127,14 +128,6 @@ class DedupConfig:
     # the worst aggregation task ~MBs; raise for corpora with genuinely
     # long conversations.
     max_turns_per_conv: int | None = 10_000
-    # Dictionary-encode conv_ids to int64 for the candidates -> verify
-    # -> cluster path (docs/TUNING.md): string conv_ids at 10^12-turn
-    # scale triple the shuffle key bytes of the two biggest shuffles
-    # and every CC round. The mapping table is a per-run checkpoint
-    # (id_map); cluster output is decoded back to strings and
-    # re-canonicalized to min-conv_id labels, so the output table is
-    # bit-identical to the unencoded path (parity-tested).
-    encode_ids: bool = False
 
     def __post_init__(self) -> None:
         if self.minhash is None:

@@ -3,11 +3,10 @@
 The reference is batch-only (chunked CSV iteration, SURVEY.md §2.10)
 and the north_rule's pipeline is batch spark-submit with checkpoints,
 so this package provides *incrementality*, not Structured Streaming
-state: anti-join resume against checkpointed outputs and delta dedup
-of newly arrived conversations against the existing signature corpus.
+state: delta dedup of newly arrived conversations against the existing
+signature corpus. Resume is per stage, in ``DedupPipeline.run``.
 """
 
 from comparador_de_registros_spark.streaming.incremental import (  # noqa: F401
-    anti_join_resume,
     incremental_candidates,
 )

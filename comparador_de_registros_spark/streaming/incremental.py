@@ -1,8 +1,5 @@
-"""Incremental / resumable processing primitives.
+"""Incremental processing primitives.
 
-* :func:`anti_join_resume` — the north_rule's pair-level resume: drop
-  work units already present in a checkpointed output (SURVEY.md §2.3:
-  ``left_anti`` against done partitions).
 * :func:`incremental_candidates` — delta dedup: newly arrived
   conversations are signed and banded, then joined against the FULL
   corpus's band table (new x all instead of all x all), so no
@@ -19,13 +16,6 @@ from pyspark.sql import functions as F
 
 from comparador_de_registros_spark.operators.lsh import lsh_band_keys
 from comparador_de_registros_spark.plans.configs import LshConfig
-
-
-def anti_join_resume(
-    todo: DataFrame, done: DataFrame, keys: list[str]
-) -> DataFrame:
-    """Work units in ``todo`` not yet present in ``done`` (by key)."""
-    return todo.join(done.select(*keys).distinct(), keys, "left_anti")
 
 
 def _band_table(signatures: DataFrame, cfg: LshConfig) -> DataFrame:

@@ -49,18 +49,14 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--stage", default="all", help="all or a comma list of stages")
     p.add_argument("--resume", action="store_true")
     p.add_argument("--run-id", default="run0")
-    p.add_argument("--shingle-k", type=int, default=12)
-    p.add_argument("--num-perm", type=int, default=128)
-    p.add_argument("--bands", type=int, default=32)
-    p.add_argument("--rows", type=int, default=4)
-    p.add_argument("--jaccard", type=float, default=0.8)
-    p.add_argument("--max-bucket", type=int, default=2000)
-    p.add_argument(
-        "--encode-ids", action="store_true",
-        help="dictionary-encode conv_ids to int64 for the candidates/"
-        "verify/cluster path (recommended at >=10^9-doc scale; output "
-        "clusters table is identical either way)",
-    )
+    # defaults come from DedupConfig, the one place they are set
+    d = DedupConfig()
+    p.add_argument("--shingle-k", type=int, default=d.shingle.k)
+    p.add_argument("--num-perm", type=int, default=d.minhash.num_perm)
+    p.add_argument("--bands", type=int, default=d.lsh.bands)
+    p.add_argument("--rows", type=int, default=d.lsh.rows)
+    p.add_argument("--jaccard", type=float, default=d.jaccard_threshold)
+    p.add_argument("--max-bucket", type=int, default=d.lsh.max_bucket_size)
     return p.parse_args(argv)
 
 
@@ -73,7 +69,6 @@ def main(argv: list[str] | None = None) -> None:
             bands=args.bands, rows=args.rows, max_bucket_size=args.max_bucket
         ),
         jaccard_threshold=args.jaccard,
-        encode_ids=args.encode_ids,
     )
     spark = build_spark(app_name=f"cdr-dedup-{args.run_id}")
     catalog = (

@@ -477,27 +477,3 @@ def test_shares_min_overlap_agrees_with_lcs():
         a = bytes(rng.integers(97, 100, n1).astype(np.uint8))
         b = bytes(rng.integers(97, 100, n2).astype(np.uint8))
         assert shares_min_overlap(a, b, k) == (lcs_len(a, b) >= k), (a, b, k)
-
-
-def test_encoded_ids_pipeline_parity(spark, turns, tmp_path):
-    """cfg.encode_ids=True runs candidates/verify/cluster on int64
-    dictionary ids (docs/TUNING.md shuffle-byte note) but must produce a
-    clusters table BIT-IDENTICAL to the string path: the output is
-    decoded and re-canonicalized to min-conv_id string labels, so
-    nothing observable depends on the run-specific id dictionary."""
-    outs = {}
-    for flag in (False, True):
-        cat = ParquetCatalog(str(tmp_path / f"enc_{flag}"))
-        pipe = DedupPipeline(
-            catalog=cat, cfg=DedupConfig(encode_ids=flag),
-            run_id="e", metrics_mode="deferred",
-        )
-        clusters = pipe.run(spark, turns)
-        outs[flag] = sorted(
-            (r["conv_id"], r["cluster_id"]) for r in clusters.collect()
-        )
-        # encoded intermediates really are int64 (the point of the flag)
-        if flag:
-            cand = cat.read(spark, "candidates")
-            assert dict(cand.dtypes)["a"] == "bigint"
-    assert outs[False] == outs[True]

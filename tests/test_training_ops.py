@@ -14,10 +14,7 @@ from comparador_de_registros_spark.operators.similarity import (
 )
 from comparador_de_registros_spark.operators.signatures import compute_signatures
 from comparador_de_registros_spark.plans.configs import DedupConfig, LshConfig
-from comparador_de_registros_spark.streaming.incremental import (
-    anti_join_resume,
-    incremental_candidates,
-)
+from comparador_de_registros_spark.streaming.incremental import incremental_candidates
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog in the morning"),
@@ -51,8 +48,6 @@ def test_exact_dup(spark, docs):
     clusters = doc_dedup.exact_dup_clusters(docs).collect()
     assert len(clusters) == 1
     assert clusters[0]["n_docs"] == 2 and clusters[0]["canonical_id"] == 1
-    pairs = doc_dedup.exact_dup_pairs(docs).collect()
-    assert [(p["a"], p["b"]) for p in pairs] == [(1, 5)]
 
 
 def test_ngram_jaccard_pairs(spark, docs):
@@ -201,13 +196,6 @@ def test_srp_bucket_cap_drops_oversized(spark):
     assert pairs.count() == 0
     d = dropped.collect()
     assert d and all(r["sz"] == 30 for r in d)
-
-
-def test_anti_join_resume(spark):
-    todo = spark.createDataFrame([(1, 2), (3, 4), (5, 6)], ["a", "b"])
-    done = spark.createDataFrame([(1, 2)], ["a", "b"])
-    left = anti_join_resume(todo, done, ["a", "b"]).collect()
-    assert sorted((r["a"], r["b"]) for r in left) == [(3, 4), (5, 6)]
 
 
 def test_incremental_candidates(spark, docs):
